@@ -171,18 +171,23 @@ def _driver_components(und: DataFrame) -> DataFrame | None:
         r = find(n)
         if r not in best or n < best[r]:
             best[r] = n
-    id_type = und.schema["a"].dataType
+    import pyarrow as pa
     from pyspark.sql import types as T
 
+    id_type = und.schema["a"].dataType
     schema = T.StructType(
         [
             T.StructField("id", id_type),
             T.StructField("component", id_type),
         ]
     )
-    return und.sparkSession.createDataFrame(
-        [(n, best[find(n)]) for n in sorted(nodes)], schema
-    )
+    # an Arrow table (cast to ``schema`` by createDataFrame), not a list
+    # of tuples: the JVM builds the relation from Arrow batches, where a
+    # tuple list goes through the Python-RDD path, which starts a second
+    # pyspark.daemon and runs Python tasks for every call
+    ids = sorted(nodes)
+    table = pa.table({"id": ids, "component": [best[find(n)] for n in ids]})
+    return und.sparkSession.createDataFrame(table, schema)
 
 
 def dedup_representatives(

@@ -65,8 +65,14 @@ def _md5_long(c: Column) -> Column:
 
 
 def _sql_str(s: str) -> str:
-    """A Python string as a SQL string literal (quotes doubled)."""
-    return "'" + str(s).replace("'", "''") + "'"
+    """A Python string as a SQL string literal. Spark's lexer reads
+    backslash escapes, so backslashes and quotes are backslash-escaped."""
+    return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _compact_pass(
@@ -83,7 +89,7 @@ def _compact_pass(
     of pure construction per pass (~40% of the kll rows' bench time);
     the SQL form is 3 parses with the IDENTICAL expressions — the
     pass-by-pass DuckDB oracle and tests/test_kll.py pin equivalence."""
-    part = ", ".join(part_cols)
+    part = ", ".join(map(_sql_ident, part_cols))
     win = f"PARTITION BY {part} ORDER BY value, tb"
     # the partition size rides the SAME (partition, order) window with a
     # full frame, so both columns compute in one Window operator over
@@ -110,7 +116,7 @@ def _compact_pass(
             " AS level",
             "value",
             "tb",
-            *[c for c in part_cols if c != "level"],
+            *[_sql_ident(c) for c in part_cols if c != "level"],
         )
         .select(*items.columns)
     )
@@ -163,7 +169,7 @@ def _build_cascade(
     for j, off in enumerate(offs):
         acc += off << j
         cs.append(acc)
-    part = ", ".join(part_cols)
+    part = ", ".join(map(_sql_ident, part_cols))
     win = f"PARTITION BY {part} ORDER BY value, tb"
     # generated-SQL form (round 13, same rationale as _compact_pass):
     # the Column-op fate CASE cost ~300 py4j roundtrips of pure
@@ -209,7 +215,7 @@ def _build_cascade(
             "CAST(level + __lvl AS INT) AS level",
             "value",
             "tb",
-            *[c for c in part_cols if c != "level"],
+            *[_sql_ident(c) for c in part_cols if c != "level"],
         )
         .select(*items.columns)
     )

@@ -47,10 +47,22 @@ def get_spark(app_name: str = "dataframes_spark", cpus: str | None = None) -> Sp
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # many distinct large generated-code classes (one per query shape)
-        # overflow the default JVM code cache in long sessions; when it
-        # fills, the JIT shuts off and random later queries run interpreted
-        # at ~10x cost. 512 MB holds the full contract-suite working set.
+        # Janino compiles one class per distinct generated-code shape and
+        # Spark keeps them in an LRU cache (a static conf, default 100
+        # entries). One pass over every entry.queries() query compiles
+        # ~2850 distinct classes; the 12 queries of the interactive
+        # benchmark compile ~160. Queries repeat in a cycle, so a cache
+        # smaller than the working set hits nothing: at 100 entries every
+        # warm pass recompiled all of them (~6-8 ms each) and the JIT
+        # compiled the fresh copies again. 6000 holds the full working
+        # set twice over; a second full pass then compiles only the
+        # ~110-170 shapes that differ on every call.
+        .config("spark.sql.codegen.cache.maxEntries", "6000")
+        # the JIT's code cache fills with compiled generated-code methods;
+        # when it is full the JIT shuts off and random later queries run
+        # interpreted at ~10x cost. Much of that pressure was fresh copies
+        # of classes evicted from the codegen cache above; 512 MB with
+        # flushing holds the full contract-suite working set.
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",

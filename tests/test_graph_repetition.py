@@ -380,3 +380,20 @@ def test_cc_null_endpoint_falls_back_to_distributed(spark):
     )
     got = connected_components(df)  # must not raise
     assert {r.component for r in got.collect() if r.id in (1, 2)} == {1}
+
+
+def test_cc_driver_lane_rows_and_dtypes(spark):
+    """The small-graph lane builds its result from Arrow batches (no
+    Python-RDD scan), keeps the id dtype and sorts rows by id — for an
+    empty graph too."""
+    for dtype, edges, want in [
+        ("bigint", [(3, 1), (2, 3), (10, 11)], [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]),
+        ("int", [(7, 5)], [(5, 5), (7, 5)]),
+        ("string", [("b", "a"), ("c", "d")], [("a", "a"), ("b", "a"), ("c", "c"), ("d", "c")]),
+        ("bigint", [], []),
+    ]:
+        df = spark.createDataFrame(edges, f"id_a {dtype}, id_b {dtype}")
+        got = connected_components(df)
+        assert got.dtypes == [("id", dtype), ("component", dtype)]
+        assert [tuple(r) for r in got.collect()] == want
+        assert "PythonRDD" not in got._jdf.queryExecution().toRdd().toDebugString()

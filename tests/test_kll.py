@@ -264,3 +264,59 @@ def test_build_cascade_equals_pass_loop(spark, n, k, shards, passes):
         for r in loop.collect()
     )
     assert got == want
+
+
+def _compact_pass_columns(items, part_cols, pass_idx, k, seed):
+    # the Column-op form of kll._compact_pass, which emits generated SQL
+    from pyspark.sql import Window as W
+
+    wrn = W.partitionBy(*part_cols).orderBy("value", "tb")
+    wn = wrn.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    x = items.withColumn("__rn", F.row_number().over(wrn)).withColumn(
+        "__n", F.count(F.lit(1)).over(wn)
+    )
+    coin = F.concat(F.lit(f"kll:{seed}:{pass_idx}:"), F.col("level").cast("string"))
+    off = (kll._md5_long(coin) % 2).cast("int")
+    overfull = F.col("__n") > k
+    paired = F.col("__rn") <= F.col("__n") - (F.col("__n") % 2)
+    keep = (~overfull) | (~paired) | ((F.col("__rn") % 2) == off)
+    return (
+        x.where(keep)
+        .select(
+            F.when(overfull & paired, F.col("level") + 1)
+            .otherwise(F.col("level"))
+            .alias("level"),
+            "value",
+            "tb",
+            *[c for c in part_cols if c != "level"],
+        )
+        .select(*items.columns)
+    )
+
+
+def test_generated_sql_quotes_seed_and_key_names(spark):
+    """A seed holding a quote and a backslash reaches the generated SQL
+    unchanged, and a key column whose name needs quoting works: the SQL
+    passes equal the Column-op form and the driver-side cascade coins."""
+    seed = "it's a\\b"
+    lit = spark.range(1).selectExpr(f"{kll._sql_str(seed)} AS s").first().s
+    assert lit == seed
+    items = spark.range(96).select(
+        (F.col("id") % 3).cast("string").alias("my key"),
+        F.lit(0).alias("level"),
+        ((F.col("id") * 37) % 96).cast("double").alias("value"),
+        F.md5(F.col("id").cast("string")).alias("tb"),
+    )
+    part = ["my key", "level"]
+    cols = ["my key", "level", "value", "tb"]
+
+    def rows(df):
+        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+    sql = col = items
+    for p in range(1, 4):
+        sql = kll._compact_pass(sql, part, p, 3, seed)
+        col = _compact_pass_columns(col, part, p, 3, seed)
+    want = rows(col)
+    assert rows(sql) == want
+    assert rows(kll._build_cascade(items, part, 3, 3, seed)) == want
