@@ -878,12 +878,8 @@ def near_dup_jaccard_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly verified, so the thresholded result set equals the exact
     computation."""
     docs = _t(spark, sf_dir, "documents")
-    # materialize=True: this query is terminal (collected immediately), and
-    # the eager path avoids the lazy plan's concurrent-stage race to
-    # populate the shared shingle cache (~2x wall clock when five consumer
-    # stages each recompute the unpopulated InMemoryRelation)
     out = ddedup.near_dup_pairs(
-        docs, "text", "doc_id", min_jaccard=0.8, shingle_k=4, materialize=True
+        docs, "text", "doc_id", min_jaccard=0.8, shingle_k=4
     )
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
@@ -896,7 +892,7 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE over the exact all-pairs jaccard relation."""
     docs = _t(spark, sf_dir, "documents")
     pairs = ddedup.near_dup_pairs(
-        docs, "text", "doc_id", min_jaccard=0.8, shingle_k=4, materialize=True
+        docs, "text", "doc_id", min_jaccard=0.8, shingle_k=4
     )
     out = dgraph.connected_components(pairs, "id_a", "id_b")
     return out.select(F.col("id").alias("doc_id"), F.col("component").alias("cluster_rep"))
@@ -911,7 +907,7 @@ def dedup_best_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     jaccard closure the near_dup_clusters oracle uses."""
     docs = _t(spark, sf_dir, "documents")
     pairs = ddedup.near_dup_pairs(
-        docs, "text", "doc_id", min_jaccard=0.8, shingle_k=4, materialize=True
+        docs, "text", "doc_id", min_jaccard=0.8, shingle_k=4
     )
     kept = dgraph.dedup_representatives_by(
         docs, pairs, "doc_id", "n_chars", keep="max"
@@ -1367,7 +1363,7 @@ def split_leak_safe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment."""
     docs = _t(spark, sf_dir, "documents")
     pairs = ddedup.near_dup_pairs(
-        docs, "text", "doc_id", min_jaccard=0.8, shingle_k=4, materialize=True
+        docs, "text", "doc_id", min_jaccard=0.8, shingle_k=4
     )
     out = dsample.split_by_cluster(
         docs, "doc_id", pairs, {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -3131,15 +3127,13 @@ def pipeline_curation_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup join, the LM fit, content dedup, the kept join-back);
     # persisted EAGERLY so the synthesis+extraction chain runs once,
     # not once per branch (lazy persist would race concurrent branches
-    # of one job — the unigram-trainer snapshot lesson; near_dup_pairs
-    # materialize=True is the precedent). Lifetime rides the returned
+    # of one job — the unigram-trainer snapshot lesson; the eager
+    # near_dup_pairs is the precedent). Lifetime rides the returned
     # frame, released on GC. At 100 TB a real pipeline materializes
     # this stage boundary to storage; the persist is the local analog.
     import weakref
 
     from pyspark import StorageLevel
-
-    from dataframes_spark.operators.dedup import _safe_unpersist
 
     raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
     raw.count()
@@ -3176,6 +3170,15 @@ def pipeline_curation_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     weakref.finalize(out, _safe_unpersist, raw)
     weakref.finalize(out, _safe_unpersist, docs)
     return out
+
+
+def _safe_unpersist(cached: DataFrame) -> None:
+    """GC-time release of a persisted stage: cleanup must never stall
+    or fail caller code (at interpreter shutdown the JVM may be gone)."""
+    try:  # pragma: no cover - exercised only at GC time
+        cached.unpersist(blocking=False)
+    except Exception:
+        pass
 
 
 def epoch_shuffle_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4467,15 +4470,11 @@ def cluster_store_incremental_docs(spark: SparkSession, sf_dir: str) -> DataFram
     # dominating what this row exists to verify: the store fold law
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
     pairs = ddedup.near_dup_pairs(
-        docs, "text", "doc_id", min_jaccard=0.8, shingle_k=4, materialize=True
+        docs, "text", "doc_id", min_jaccard=0.8, shingle_k=4
     )
-    dgraph.cluster_store_update(
-        spark, t, pairs.filter(F.col("id_a") % 2 == 0), report=False
-    )
-    dgraph.cluster_store_update(
-        spark, t, pairs.filter(F.col("id_a") % 2 == 1), report=False
-    )
-    return dgraph.read_cluster_store(spark, t).select("id", "component")
+    dgraph.cluster_store_update(spark, t, pairs.filter(F.col("id_a") % 2 == 0))
+    dgraph.cluster_store_update(spark, t, pairs.filter(F.col("id_a") % 2 == 1))
+    return spark.table(t).select("id", "component")
 
 
 def rollup_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4504,7 +4503,6 @@ def rollup_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
             "1 hour",
             by=["event_type"],
-            report=False,
         )
     served = drollup.rollup_serve(spark, t)
     return served.select(
@@ -4703,7 +4701,6 @@ def rollup_distinct_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame
             "1 hour",
             p=8,
             lane_hash="md5",
-            report=False,
         )
     est = drollup.rollup_distinct_serve_store(spark, t)
     return est.select(
@@ -4782,7 +4779,6 @@ def rollup_multi_weekly_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderdate",
             ["o_totalprice", "o_custkey"],
             "1 week",
-            report=False,
         )
     served = drollup.rollup_multi_serve(spark, t)
     return served.select(

@@ -154,28 +154,16 @@ def byte_types_from_counts(counts: DataFrame) -> DataFrame:
     return hexed.select("word", "freq", syms.alias("syms"))
 
 
-def word_type_store_update(spark, table: str, batch_counts: DataFrame) -> dict:
+def word_type_store_update(spark, table: str, batch_counts: DataFrame) -> None:
     """Fold a batch's word-type counts into a persisted store (catalog
-    parquet table, the staging-swap idiom shared with the DSIR/CMS/HLL
-    stores): per-word frequency addition, one swap. The store is
-    vocabulary-sized however many epochs fold in, and carries no
-    configuration (the 2-column schema is config-free), so there is
-    nothing to stamp. Not transactional: run between increments.
-    Returns ``{"words", "total"}``."""
-    # existence check, not a broad except: transient JVM errors must
-    # propagate, never be read as "store absent" (history reset)
-    if spark.catalog.tableExists(table):
-        merged = merge_type_counts(spark.table(table), batch_counts)
-    else:
-        merged = batch_counts
-    from dataframes_spark.io.store import staging_swap
+    parquet table, `io.store.fold_store`): per-word frequency addition,
+    one swap. The store is vocabulary-sized however many epochs fold
+    in, and carries no configuration (the 2-column schema is
+    config-free), so there is nothing to stamp. Not transactional: run
+    between increments."""
+    from dataframes_spark.io.store import fold_store
 
-    staging_swap(spark, table, merged)
-    out = spark.table(table)
-    row = out.agg(
-        F.count(F.lit(1)).alias("w"), F.sum("freq").alias("t")
-    ).first()
-    return {"words": row["w"], "total": row["t"]}
+    fold_store(spark, table, batch_counts, merge=merge_type_counts)
 
 
 def bpe_learn_from_store(

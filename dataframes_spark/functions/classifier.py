@@ -288,33 +288,29 @@ def classifier_store_update(
     dim: int,
     salt: str = "qc",
     lane_hash: str = "xxhash64",
-) -> dict:
+) -> None:
     """Persist a trained classifier as a catalog table (the repo's
-    store idiom): ``(bucket, weight)`` rows plus the stamped config —
-    ``(dim, salt, lane_hash, bias)`` ride constant columns, so scoring
-    can never silently run under a different feature space than the
-    one the model was trained in. REPLACES any prior model (models are
-    versions, not folds — retraining is the update path); crash-safe
-    via the staging swap. Returns ``{"buckets"}``."""
-    from dataframes_spark.io.store import staging_swap
+    store idiom, `io.store.fold_store`): ``(bucket, weight)`` rows,
+    with ``(bias, dim, salt, lane_hash)`` in the store's stamp, so
+    scoring can never silently run under a different feature space
+    than the one the model was trained in. A model with zero non-zero
+    weights (strong L1 can do that) stays servable on its bias alone.
+    REPLACES any prior model (models are versions, not folds —
+    retraining is the update path); crash-safe via the staging swap."""
+    from dataframes_spark.io.store import fold_store
 
-    stamped = weights.select(
-        F.col("bucket").cast("int").alias("bucket"),
-        F.col("weight").cast("double").alias("weight"),
-        F.lit(float(bias)).alias("__qc_bias"),
-        F.lit(int(dim)).alias("__qc_dim"),
-        F.lit(salt).alias("__qc_salt"),
-        F.lit(lane_hash).alias("__qc_hash"),
+    fold_store(
+        spark,
+        table,
+        weights.select(
+            F.col("bucket").cast("int").alias("bucket"),
+            F.col("weight").cast("double").alias("weight"),
+        ),
+        stamp={
+            "bias": float(bias), "dim": int(dim), "salt": salt,
+            "hash": lane_hash,
+        },
     )
-    # a bias-only SENTINEL row (NULL bucket) carries the stamp even
-    # when the model has zero non-zero weights (strong L1 can do that)
-    # — bias-only scoring is well-defined and must stay servable
-    sentinel = spark.createDataFrame(
-        [(None, None, float(bias), int(dim), salt, lane_hash)],
-        stamped.schema,
-    )
-    staging_swap(spark, table, stamped.unionByName(sentinel))
-    return {"buckets": spark.table(table).count() - 1}
 
 
 def score_quality_from_store(
@@ -329,20 +325,17 @@ def score_quality_from_store(
     config recovers from the stamp, so the scoring feature space is the
     training one BY CONSTRUCTION. Same plan as `score_quality`
     (broadcast weights, one per-doc reduction)."""
-    store = spark.table(table)
-    meta = store.select(
-        "__qc_bias", "__qc_dim", "__qc_salt", "__qc_hash"
-    ).first()
-    if meta is None:
-        raise ValueError(f"classifier store {table!r} is empty")
+    from dataframes_spark.io.store import store_stamp
+
+    meta = store_stamp(spark, table)
     return score_quality(
         df,
-        store.filter(F.col("bucket").isNotNull()).select("bucket", "weight"),
-        float(meta["__qc_bias"]),
+        spark.table(table),
+        meta["bias"],
         text_col,
         id_col,
-        dim=int(meta["__qc_dim"]),
-        salt=meta["__qc_salt"],
-        lane_hash=meta["__qc_hash"],
+        dim=meta["dim"],
+        salt=meta["salt"],
+        lane_hash=meta["hash"],
         out_col=out_col,
     )

@@ -295,9 +295,7 @@ def train_langid(
         if cm[k, b] != 0.0
     ]
     # an all-zero model exports an EMPTY weight relation (never a
-    # placeholder row — a NULL-bucket row would masquerade as a bias
-    # sentinel in the store and poison score-from-store); bias-only
-    # scoring stays well-defined
+    # placeholder row); bias-only scoring stays well-defined
     weights = spark.createDataFrame(
         export, "lang string, bucket int, weight double"
     )
@@ -409,41 +407,29 @@ def langid_store_update(
     lane_hash: str = "xxhash64",
     n_lo: int = 2,
     n_hi: int = 3,
-) -> dict:
-    """Persist a trained langid model as a stamped catalog table:
-    ``(lang, bucket, weight)`` rows plus per-class bias sentinel rows
-    (bucket NULL) and the featurization stamp — scoring from the store
-    can never run in a different feature space than training
-    (`classifier_store_update` contract). REPLACES any prior model;
-    crash-safe staging swap. Returns ``{"classes", "weights"}``."""
-    from dataframes_spark.io.store import staging_swap
+) -> None:
+    """Persist a trained langid model as a stamped catalog table
+    (`io.store.fold_store`): ``(lang, bucket, weight)`` rows, with the
+    per-class biases and the featurization config in the store's stamp
+    — scoring from the store can never run in a different feature space
+    than training (`classifier_store_update` contract). REPLACES any
+    prior model; crash-safe staging swap."""
+    from dataframes_spark.io.store import fold_store
 
-    stamped = weights.select(
-        F.col("lang").cast("string").alias("lang"),
-        F.col("bucket").cast("int").alias("bucket"),
-        F.col("weight").cast("double").alias("weight"),
-        F.lit(None).cast("double").alias("__lg_bias"),
-        F.lit(int(dim)).alias("__lg_dim"),
-        F.lit(salt).alias("__lg_salt"),
-        F.lit(lane_hash).alias("__lg_hash"),
-        F.lit(int(n_lo)).alias("__lg_nlo"),
-        F.lit(int(n_hi)).alias("__lg_nhi"),
+    fold_store(
+        spark,
+        table,
+        weights.select(
+            F.col("lang").cast("string").alias("lang"),
+            F.col("bucket").cast("int").alias("bucket"),
+            F.col("weight").cast("double").alias("weight"),
+        ),
+        stamp={
+            "biases": {l: float(b) for l, b in biases.items()},
+            "dim": int(dim), "salt": salt, "hash": lane_hash,
+            "n_lo": int(n_lo), "n_hi": int(n_hi),
+        },
     )
-    sentinels = spark.createDataFrame(
-        [
-            (l, None, None, float(b), int(dim), salt, lane_hash,
-             int(n_lo), int(n_hi))
-            for l, b in sorted(biases.items())
-        ],
-        stamped.schema,
-    )
-    staging_swap(spark, table, stamped.unionByName(sentinels))
-    out = spark.table(table)
-    row = out.agg(
-        F.countDistinct("lang").alias("c"),
-        F.count("bucket").alias("w"),
-    ).first()
-    return {"classes": int(row["c"]), "weights": int(row["w"])}
 
 
 def langid_score_from_store(
@@ -457,29 +443,20 @@ def langid_score_from_store(
 ) -> DataFrame:
     """Score a corpus against the persisted model — featurization
     config recovers from the stamp (same plan as `langid_score`)."""
-    store = spark.table(table)
-    meta = store.select(
-        "__lg_dim", "__lg_salt", "__lg_hash", "__lg_nlo", "__lg_nhi"
-    ).first()
-    if meta is None:
-        raise ValueError(f"langid store {table!r} is empty")
-    biases = {
-        r["lang"]: float(r["__lg_bias"])
-        for r in store.filter(F.col("bucket").isNull()).collect()
-    }
+    from dataframes_spark.io.store import store_stamp
+
+    meta = store_stamp(spark, table)
     return langid_score(
         df,
-        store.filter(F.col("bucket").isNotNull()).select(
-            "lang", "bucket", "weight"
-        ),
-        biases,
+        spark.table(table),
+        meta["biases"],
         text_col,
         id_col,
-        dim=int(meta["__lg_dim"]),
-        salt=meta["__lg_salt"],
-        lane_hash=meta["__lg_hash"],
-        n_lo=int(meta["__lg_nlo"]),
-        n_hi=int(meta["__lg_nhi"]),
+        dim=meta["dim"],
+        salt=meta["salt"],
+        lane_hash=meta["hash"],
+        n_lo=meta["n_lo"],
+        n_hi=meta["n_hi"],
         out_col=out_col,
         score_col=score_col,
     )

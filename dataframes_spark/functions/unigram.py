@@ -523,22 +523,24 @@ def unigram_store_update(
     table: str,
     pieces: DataFrame,
     max_piece_len: int = 6,
-) -> dict:
-    """Persist a trained piece table as a stamped catalog table
-    (piece, cnt, lp, stamp) — encode from the store can never run
-    under a different lattice width than training. REPLACES any prior
-    model (models are versions, the classifier-store contract);
-    crash-safe staging swap. Returns ``{"pieces"}``."""
-    from dataframes_spark.io.store import staging_swap
+) -> None:
+    """Persist a trained piece table as a catalog table ``(piece, cnt,
+    lp)`` stamped with its lattice width — encode from the store can
+    never run under a different width than training. REPLACES any
+    prior model (models are versions, the classifier-store contract);
+    crash-safe staging swap (`io.store.fold_store`)."""
+    from dataframes_spark.io.store import fold_store
 
-    stamped = pieces.select(
-        "piece",
-        F.col("cnt").cast("long").alias("cnt"),
-        F.col("lp").cast("double").alias("lp"),
-        F.lit(int(max_piece_len)).alias("__ug_maxlen"),
+    fold_store(
+        spark,
+        table,
+        pieces.select(
+            "piece",
+            F.col("cnt").cast("long").alias("cnt"),
+            F.col("lp").cast("double").alias("lp"),
+        ),
+        stamp={"max_piece_len": int(max_piece_len)},
     )
-    staging_swap(spark, table, stamped)
-    return {"pieces": spark.table(table).count()}
 
 
 def unigram_encode_from_store(
@@ -550,16 +552,14 @@ def unigram_encode_from_store(
 ) -> DataFrame:
     """Encode against the persisted model; the lattice width recovers
     from the stamp."""
-    store = spark.table(table)
-    meta = store.select("__ug_maxlen").first()
-    if meta is None:
-        raise ValueError(f"unigram store {table!r} is empty")
+    from dataframes_spark.io.store import store_stamp
+
     return unigram_encode(
         df,
         text_col,
         id_col,
-        store.select("piece", "cnt", "lp"),
-        max_piece_len=int(meta["__ug_maxlen"]),
+        spark.table(table),
+        max_piece_len=store_stamp(spark, table)["max_piece_len"],
     )
 
 

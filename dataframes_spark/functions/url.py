@@ -179,7 +179,7 @@ def url_fingerprints(
     """Distinct canonical-URL keys of a corpus — the persistable STORE
     for incremental URL dedup: one ``(url)`` string row per distinct
     canonical URL (tens of bytes; no text retained). Bucket the store
-    by ``url`` (`io.store.staging_swap(bucket_by="url")`) and the
+    by ``url`` (`io.store.fold_store(bucket_by="url")`) and the
     incremental anti join scans it with no store-side exchange."""
     return (
         df.filter(F.col(url_col).isNotNull())

@@ -37,12 +37,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table (bucket metadata flows from the catalog, so
-    joins/aggregations on the bucket key skip their shuffle)."""
-    return spark.table(table)
-
-
 def write_fingerprints(
     fps: DataFrame, table: str, num_buckets: int = 32, mode: str = "overwrite"
 ) -> None:
@@ -73,15 +67,6 @@ def write_lsh_store(
     )
 
 
-def read_lsh_store(spark: SparkSession, table: str) -> DataFrame:
-    """Read a persisted LSH bucket store (flat ``(id, band, bucket)``) —
-    bucket metadata flows from the catalog, so the candidate join's
-    ``(band, bucket)`` equi-keys stay co-located. Do NOT project the
-    columns through expressions: a projection over the scan discards
-    its bucketed output partitioning."""
-    return spark.table(table)
-
-
 def write_span_store(
     hashes: DataFrame, table: str, num_buckets: int = 32, mode: str = "overwrite"
 ) -> None:
@@ -94,24 +79,6 @@ def write_span_store(
     span dedup stays O(batch) in shuffle volume as the store grows
     toward trillions of windows (plan pinned in tests/test_plans.py)."""
     write_bucketed(hashes, table, bucket_by="wh", num_buckets=num_buckets, mode=mode)
-
-
-def read_span_store(spark: SparkSession, table: str) -> DataFrame:
-    """Read a persisted window-hash store (flat ``(wh)``) — bucket
-    metadata flows from the catalog, so the incremental probe's ``wh``
-    equi-key stays co-located. Do NOT project the column through
-    expressions: a projection over the scan discards its bucketed
-    output partitioning."""
-    return spark.table(table)
-
-
-def compact_span_store(
-    spark: SparkSession, table: str, num_buckets: int = 32
-) -> dict:
-    """Rewrite a window-hash store into one file per bucket (same keys,
-    same bucketing) — the `compact_lsh_store` maintenance pass for the
-    span store after many incremental appends."""
-    return compact_store(spark, table, "wh", num_buckets)
 
 
 def write_embedding_store(
@@ -129,39 +96,11 @@ def write_embedding_store(
     )
 
 
-def read_embedding_store(spark: SparkSession, table: str) -> DataFrame:
-    """Read a persisted embedding store (flat ``(id, bucket, vec,
-    nrm)``) — bucket metadata flows from the catalog, so the candidate
-    join's ``bucket`` equi-key stays co-located. Do NOT project the
-    columns through expressions: a projection over the scan discards
-    its bucketed output partitioning."""
-    return spark.table(table)
-
-
-def compact_embedding_store(
-    spark: SparkSession, table: str, num_buckets: int = 32
-) -> dict:
-    """Rewrite an embedding store into one file per bucket (same keys,
-    same bucketing) — the `compact_lsh_store` maintenance pass for the
-    semantic store after many incremental appends."""
-    return compact_store(spark, table, "bucket", num_buckets)
-
-
-def read_fingerprints(spark: SparkSession, table: str) -> DataFrame:
-    """Read a persisted fingerprint store (flat ``(len, xx, md5)``) —
-    bucket metadata flows from the catalog, so the incremental anti
-    join's xx equi-key stays co-located. Do NOT project the columns
-    into a struct or reorder them with expressions: a projection over
-    the scan discards its bucketed output partitioning."""
-    return spark.table(table)
-
-
 def compact_store(
     spark: SparkSession,
     table: str,
     bucket_by: str | Sequence[str],
     num_buckets: int = 32,
-    sort_by: str | Sequence[str] | None = None,
 ) -> dict:
     """Rewrite a bucketed store in place, one file per bucket.
 
@@ -178,38 +117,32 @@ def compact_store(
     and the rewrite sprays each bucket across every input task. With
     the bucketed scan each task holds exactly one bucket and the
     rewrite yields ONE file per bucket. Bucket keys (and therefore
-    every downstream no-reshuffle join plan) are unchanged — pinned in
-    tests/test_plans.py.
+    every downstream no-reshuffle join plan) and the store's stamp are
+    unchanged — pinned in tests/test_plans.py.
 
-    Not transactional: the rewrite stages to ``<table>__compact`` and
-    swaps via DROP + RENAME; run it when no reader holds the table
+    The rewrite swaps through ``io.store.staging_swap`` (orphan-safe
+    staging, DROP + RENAME); run it when no reader holds the table
     (e.g. between increments — a natural cadence is every N appends or
     when files-per-bucket exceeds ~10). Returns
     ``{"files_before", "files_after", "rows"}``.
     """
     from pyspark.sql import functions as F
 
-    cols = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by)
+    from .store import _stamp_json, staging_swap
+
     df = spark.table(table)
     files_before = df.select(F.input_file_name()).distinct().count()
     rows = df.count()
-    staging = f"{table}__compact"
-    spark.sql(f"DROP TABLE IF EXISTS {staging}")
     conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     prev = spark.conf.get(conf_key, "true")
     spark.conf.set(conf_key, "false")
     try:
-        write_bucketed(
-            spark.table(table),
-            staging,
-            bucket_by=cols,
-            num_buckets=num_buckets,
-            sort_by=sort_by,
+        staging_swap(
+            spark, table, spark.table(table), bucket_by, num_buckets,
+            _stamp_json(spark, table),
         )
     finally:
         spark.conf.set(conf_key, prev)
-    spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
     files_after = (
         spark.table(table).select(F.input_file_name()).distinct().count()
     )
@@ -218,28 +151,3 @@ def compact_store(
         "files_after": files_after,
         "rows": rows,
     }
-
-
-def compact_lsh_store(spark: SparkSession, table: str, num_buckets: int = 32) -> dict:
-    """Compact an LSH bucket store (``write_lsh_store`` layout): same
-    ``(band, bucket)`` keys, one file per bucket — identical candidates,
-    identical no-reshuffle join plan, bounded file count."""
-    return compact_store(spark, table, ("band", "bucket"), num_buckets)
-
-
-def compact_fingerprint_store(
-    spark: SparkSession, table: str, num_buckets: int = 32
-) -> dict:
-    """Compact an exact-dedup fingerprint store (``write_fingerprints``
-    layout): same ``xx`` bucket key, one file per bucket."""
-    return compact_store(spark, table, "xx", num_buckets)
-
-
-def compact_pair_store(
-    spark: SparkSession, table: str, num_buckets: int = 32
-) -> dict:
-    """Compact a retention activity-pair store
-    (``streaming.retention_each_batch`` layout, bucketed by ``u``): same
-    user bucket key, one file per bucket — identical pairs, identical
-    cohort matrix, bounded file count however many epochs appended."""
-    return compact_store(spark, table, "u", num_buckets)

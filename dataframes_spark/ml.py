@@ -20,7 +20,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dataframes_spark.io.store import staging_swap
+from dataframes_spark.io.store import fold_store
 
 
 def _assemble(df: DataFrame, features: Sequence[str]):
@@ -369,31 +369,23 @@ def pca_project(
 
 def moments_store_update(
     spark, table: str, df: DataFrame, vec_col: str, dim: int
-) -> dict:
+) -> None:
     """Fold a batch's `embedding_moments` into a persisted moment store
-    (catalog parquet table, the sketch-store staging-swap idiom).
-    Moments are sums, so the merge is element-wise addition — the store
-    stays ``dim + dim^2 + 1`` values however many epochs fold in, and
+    (catalog parquet table, `io.store.fold_store`). Moments are sums,
+    so the merge is element-wise addition — the store stays
+    ``dim + dim^2 + 1`` values however many epochs fold in, and
     `pca_fit_from_store` refits PCA over EVERYTHING ever folded in
     at O(batch) per epoch: each batch is scanned once, history never.
     NOT idempotent (sums double-count a refolded batch — CMS semantics,
-    not HLL): fold each batch exactly once. Returns ``{"n"}``."""
-    batch = embedding_moments(df, vec_col, dim)
-    # existence check, not a broad except: transient JVM errors must
-    # propagate, never be read as "store absent" (history reset)
-    if spark.catalog.tableExists(table):
-        merged = (
-            spark.table(table)
-            .unionByName(batch)
-            .groupBy("pos")
-            .agg(F.sum("val").alias("val"), F.sum("n").alias("n"))
-        )
-    else:
-        merged = batch
-    staging_swap(spark, table, merged)
-    out = spark.table(table)
-    n = out.agg(F.max("n")).first()[0]
-    return {"n": int(n) if n is not None else 0}
+    not HLL): fold each batch exactly once."""
+    fold_store(
+        spark,
+        table,
+        embedding_moments(df, vec_col, dim),
+        merge=lambda old, new: old.unionByName(new)
+        .groupBy("pos")
+        .agg(F.sum("val").alias("val"), F.sum("n").alias("n")),
+    )
 
 
 def pca_fit_from_store(spark, table: str, k: int, dim: int) -> dict:

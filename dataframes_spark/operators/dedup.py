@@ -25,7 +25,6 @@ the pipeline lazy.
 from __future__ import annotations
 
 import math
-import weakref
 
 import pandas as pd
 
@@ -900,7 +899,6 @@ def near_dup_pairs(
     num_hashes: int = 128,
     bands: int = 16,
     shingle_k: int = 4,
-    materialize: bool = False,
 ) -> DataFrame:
     """Corpus-scale near-duplicate detection: MinHash-LSH candidate
     generation + exact Jaccard verification of candidates only.
@@ -916,25 +914,13 @@ def near_dup_pairs(
     candidate set near the true near-dup count. Precision is exact:
     every emitted pair is verified with the true metric.
 
-    By default the call is LAZY and runs no job at construction: the
-    returned frame composes with further filters/joins under full
-    Catalyst pushdown. The corpus-sized shingle cache backing it rides
-    ON THE RETURNED OBJECT (``._graft_shingle_cache``) and is
-    unpersisted when that exact object is garbage-collected. Frames
-    DERIVED from it (``.select``, ``.filter``, ...) are new Python
-    objects that do not carry the reference — keep the returned frame
-    alive while consuming derivatives, or the cache is released early
-    (results stay correct; Spark just recomputes the shingle relation
-    per consumer stage). Pass ``materialize=True`` to instead EAGERLY
-    execute the pipeline at call time: the (tiny, true-near-dup-sized)
-    result is persisted, the shingle cache is released immediately, and
-    the caller owns ``.unpersist()`` of the returned frame — the right
-    mode for long-lived sessions issuing many dedup calls back to
-    back. Eager mode is also measurably faster when the result is
-    consumed immediately: in lazy mode the first action schedules the
-    five consumer stages concurrently and they race to populate the
-    still-empty shingle cache, recomputing the scan (~2x wall clock);
-    the eager path populates the cache once before the fan-out."""
+    The call is EAGER: it executes the pipeline at call time, persists
+    the (tiny, true-near-dup-sized) result, and releases the
+    corpus-sized shingle cache before returning; the caller owns
+    ``.unpersist()`` of the returned frame. Executing once populates the
+    shingle cache before its five consumer stages fan out — a lazy plan
+    made them race to populate the still-empty cache, recomputing the
+    scan (~2x wall clock)."""
     # one hashed shingle-set relation feeds BOTH the signature fold and the
     # verify joins; persisted because three consumers would otherwise each
     # re-scan the corpus and re-shingle (MEMORY_AND_DISK: ~8B per distinct
@@ -982,36 +968,12 @@ def near_dup_pairs(
     # Stage 2 — exact verification of the survivors only (the shared
     # _verify_pairs definition; min_jaccard > 0 always holds here so the
     # threshold filter is applied inside).
-    pairs = _verify_pairs(prefiltered, sets, min_jaccard)
-    if materialize:
-        # Materialize the result (sized by TRUE near-dups — tiny vs the
-        # corpus) so the corpus-sized shingle cache can be released right
-        # away instead of leaking one cached relation per call in long
-        # sessions. The caller owns `.unpersist()` of the returned frame.
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-        pairs.count()
-        sets.unpersist()
-        return pairs
-    # Lazy mode: no job at construction. The shingle cache must outlive
-    # this call (the returned plan references it from five consumers), so
-    # tie its lifetime to the returned frame: a strong reference rides on
-    # the object (introspectable by callers that need to extend it) and
-    # the finalizer releases the cache when the object is collected
-    # (blocking=False: cleanup must never stall caller code; failures at
-    # interpreter shutdown are irrelevant because the JVM dies with it).
-    # NOTE the documented caveat: derived frames do not carry the
-    # reference — `near_dup_pairs(...).select(...)` with the intermediate
-    # dropped releases the cache before any action runs.
-    pairs._graft_shingle_cache = sets
-    weakref.finalize(pairs, _safe_unpersist, sets)
+    pairs = _verify_pairs(prefiltered, sets, min_jaccard).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    pairs.count()
+    sets.unpersist()
     return pairs
-
-
-def _safe_unpersist(cached: DataFrame) -> None:
-    try:  # pragma: no cover - exercised only at GC time
-        cached.unpersist(blocking=False)
-    except Exception:
-        pass
 
 
 def simhash(

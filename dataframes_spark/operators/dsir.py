@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataframes_spark.io.store import staging_swap
+from dataframes_spark.io.store import fold_store, store_stamp
 
 #: Laplace smoothing mass added to every bucket count.
 ALPHA = 1.0
@@ -183,56 +183,26 @@ def merge_counts(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 def dsir_store_update(
-    spark, table: str, batch_counts: DataFrame, buckets: int | None = None
-) -> dict:
+    spark, table: str, batch_counts: DataFrame, buckets: int
+) -> None:
     """Fold a batch's bucket counts into a persisted DSIR count store
-    (catalog parquet table, same staging-swap idiom as the CMS/HLL
-    stores): scan the batch once, add per bucket, swap. The store is at
-    most ``buckets`` rows however many epochs fold in — a constant-size
-    job. Not transactional: run between increments, like the other
-    stores. Returns ``{"buckets", "total"}``.
+    (catalog parquet table, `io.store.fold_store`): scan the batch
+    once, add per bucket, swap. The store is at most ``buckets`` rows
+    however many epochs fold in — a constant-size job. Not
+    transactional: run between increments, like the other stores.
 
     ``buckets`` — the hash domain ``batch_counts`` was built with —
-    stamps the store (constant ``b`` column, the categorical-PSI-store
-    pattern): folding counts built with a DIFFERENT domain, or fitting
-    with a mismatched ``buckets`` argument (`dsir_fit_from_stores`),
-    raises instead of silently dropping/zeroing buckets. Stores written
-    before the stamp existed fold as legacy (unstamped) and gain the
-    stamp on their first stamped update."""
-    # existence check, not a broad except: transient JVM errors must
-    # propagate, never be read as "store absent" (history reset)
-    if spark.catalog.tableExists(table):
-        prior = spark.table(table)
-        stored_b = _stamped_buckets(prior)
-        if (
-            buckets is not None
-            and stored_b is not None
-            and int(stored_b) != int(buckets)
-        ):
-            raise ValueError(
-                f"DSIR store {table!r} was built with buckets={stored_b}; "
-                f"refusing to fold counts hashed into buckets={buckets}"
-            )
-        merged = merge_counts(prior, batch_counts)
-    else:
-        merged = batch_counts
-    if buckets is not None:
-        merged = merged.withColumn("b", F.lit(int(buckets)))
-    staging_swap(spark, table, merged)
-    out = spark.table(table)
-    row = out.agg(
-        F.count(F.lit(1)).alias("b"), F.sum("c").alias("t")
-    ).first()
-    return {"buckets": int(row["b"]), "total": int(row["t"] or 0)}
-
-
-def _stamped_buckets(counts: DataFrame) -> int | None:
-    """The bucket-domain stamp of a count store, or None for legacy
-    unstamped stores. One ``.first()`` over a <= B-row relation."""
-    if "b" not in counts.columns:
-        return None
-    row = counts.agg(F.max("b").alias("b")).first()
-    return None if row is None or row["b"] is None else int(row["b"])
+    stamps the store: folding counts built with a DIFFERENT domain, or
+    fitting with a mismatched ``buckets`` argument
+    (`dsir_fit_from_stores`), raises instead of silently
+    dropping/zeroing buckets."""
+    fold_store(
+        spark,
+        table,
+        batch_counts,
+        merge=merge_counts,
+        stamp={"buckets": int(buckets)},
+    )
 
 
 def _model_from_counts(
@@ -302,28 +272,16 @@ def dsir_fit_from_stores(
     O(batch), and the model over the stores equals the one-shot fit over
     everything folded (count-merge associativity).
 
-    Refuses a ``buckets`` that disagrees with either store: a stamped
-    store (see `dsir_store_update`) must match exactly; a legacy
-    unstamped store must at least have every observed bucket inside
-    ``[0, buckets)`` — otherwise the range join would silently drop the
+    Refuses a ``buckets`` that disagrees with either store's stamp (see
+    `dsir_store_update`): the range join would otherwise silently drop
     out-of-domain counts and fit a wrong model."""
     for table in (target_table, raw_table):
-        counts = spark.table(table)
-        stamped = _stamped_buckets(counts)
-        if stamped is not None:
-            if stamped != int(buckets):
-                raise ValueError(
-                    f"DSIR store {table!r} was built with buckets="
-                    f"{stamped}; refusing to fit with buckets={buckets}"
-                )
-        else:
-            row = counts.agg(F.max("bucket").alias("m")).first()
-            if row is not None and row["m"] is not None and row["m"] >= buckets:
-                raise ValueError(
-                    f"DSIR store {table!r} carries bucket {row['m']} >= "
-                    f"buckets={buckets}: the store was built with a larger "
-                    f"hash domain"
-                )
+        built = store_stamp(spark, table)["buckets"]
+        if built != int(buckets):
+            raise ValueError(
+                f"DSIR store {table!r} was built with buckets={built}; "
+                f"refusing to fit with buckets={buckets}"
+            )
     return dsir_fit_from_counts(
         spark, spark.table(target_table), spark.table(raw_table), buckets
     )

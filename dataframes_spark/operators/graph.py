@@ -264,8 +264,7 @@ def cluster_store_update(
     dst: str = "id_b",
     num_buckets: int = 32,
     max_iter: int = 25,
-    report: bool = True,
-) -> dict:
+) -> None:
     """Fold a batch of near-dup EDGES into a persisted cluster store —
     INCREMENTAL connected components, the missing piece that made the
     dedup→cluster→split chain refit its closure from scratch each epoch.
@@ -323,18 +322,15 @@ def cluster_store_update(
 
     Per-epoch cost: O(batch) shuffle for the lookup + rep-graph CC,
     plus ONE map-only rewrite of the store (broadcast remap; the
-    rewrite is IO, not shuffle). Returns ``{"nodes", "components"}``
-    (both None under ``report=False``, which skips the full-store
-    count/countDistinct read-back — one extra shuffle job per fold the
-    STORE never needed; callers that fold pipelines and ignore the
-    dict should pass False).
+    rewrite is IO, not shuffle).
     """
-    from dataframes_spark.io.store import staging_swap
+    from dataframes_spark.io.store import fold_store
 
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    # existence decides between a full write and the append-only path
     if not spark.catalog.tableExists(table):
         comp = connected_components(edges, src=src, dst=dst, max_iter=max_iter)
-        staging_swap(spark, table, comp, bucket_by="id", num_buckets=num_buckets)
+        fold_store(spark, table, comp, bucket_by="id", num_buckets=num_buckets)
     else:
         store = spark.table(table)
         nodes = (
@@ -405,25 +401,10 @@ def cluster_store_update(
                     F.coalesce("__new", F.col("component")).alias("component"),
                 )
             )
-            staging_swap(
+            fold_store(
                 spark,
                 table,
                 updated.unionByName(new_rows),
                 bucket_by="id",
                 num_buckets=num_buckets,
             )
-    if not report:
-        return {"nodes": None, "components": None}
-    out = spark.table(table)
-    row = out.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("component").alias("c"),
-    ).first()
-    return {"nodes": int(row["n"]), "components": int(row["c"])}
-
-
-def read_cluster_store(spark: SparkSession, table: str) -> DataFrame:
-    """Read a persisted cluster store (``(id, component)`` bucketed by
-    ``id``): membership probes join on ``id`` with no store-side
-    exchange (catalog bucket metadata)."""
-    return spark.table(table)

@@ -431,37 +431,22 @@ def kll_store_update(
     passes: int = 20,
     merge_passes: int = 10,
     seed: str = "",
-) -> dict:
+) -> None:
     """Fold a batch into a persisted KLL store (catalog parquet table,
-    the staging-swap idiom shared by every store in this repo): sketch
-    the batch, union with the stored sketch, re-compact, swap. State
-    stays ``O(k log(n/k))`` rows however many epochs fold in; per-epoch
-    cost is the batch sketch plus constant merge work. The store stamps
-    its ``k`` (constant column, the DSIR-store pattern) and refuses a
-    fold with a different capacity. Returns ``{"rows", "n", "k"}``."""
-    from dataframes_spark.io.store import staging_swap
+    `io.store.fold_store`): sketch the batch, union with the stored
+    sketch, re-compact, swap. State stays ``O(k log(n/k))`` rows however
+    many epochs fold in; per-epoch cost is the batch sketch plus
+    constant merge work. The store is stamped with its ``k`` and
+    refuses a fold with a different capacity."""
+    from dataframes_spark.io.store import fold_store
 
-    bs = kll_build(
-        batch, value_col, id_col, k=k, shards=shards, passes=passes,
-        merge_passes=merge_passes, seed=seed,
+    fold_store(
+        spark,
+        table,
+        kll_build(
+            batch, value_col, id_col, k=k, shards=shards, passes=passes,
+            merge_passes=merge_passes, seed=seed,
+        ),
+        merge=lambda old, new: kll_merge(old, new, k=k, seed=seed),
+        stamp={"k": int(k)},
     )
-    if spark.catalog.tableExists(table):
-        prior = spark.table(table)
-        stamped = prior.agg(F.max("k").alias("k")).first()["k"]
-        if stamped is not None and int(stamped) != int(k):
-            raise ValueError(
-                f"KLL store {table!r} was built with k={stamped}; "
-                f"refusing to fold a k={k} batch sketch"
-            )
-        merged = kll_merge(prior.select("level", "value", "tb"), bs, k=k, seed=seed)
-    else:
-        merged = bs
-    staging_swap(spark, table, merged.withColumn("k", F.lit(int(k))))
-    out = spark.table(table)
-    row = out.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.coalesce(
-            F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), level)")), F.lit(0)
-        ).alias("n"),
-    ).first()
-    return {"rows": int(row["rows"]), "n": int(row["n"]), "k": int(k)}

@@ -16,7 +16,7 @@ Design for scale:
 - ``rollup_store_update`` folds a batch into a persisted catalog table
   at O(batch) cost: history is never re-scanned, the store stays
   calendar-bounded ((buckets so far) x groups rows) forever, and the
-  swap is crash-safe (`io.store.staging_swap`). Counts/sums SUM-merge
+  swap is crash-safe (`io.store.fold_store`). Counts/sums SUM-merge
   (CMS semantics: NOT idempotent — fold each batch exactly once);
   min/max merge idempotently. The store is stamped with
   ``(value col, width, group cols)`` and REFUSES a mismatched fold —
@@ -39,7 +39,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..io.store import staging_swap
+from ..io.store import fold_store, store_stamp
 
 _UNITS_US = {
     "second": 1_000_000,
@@ -174,12 +174,8 @@ def rollup_finalize(
     )
 
 
-def _meta_cols(value_col: str, w_us: int, by: Sequence[str]) -> list[Column]:
-    return [
-        F.lit(value_col).alias("__ra_col"),
-        F.lit(int(w_us)).alias("__ra_width_us"),
-        F.lit(",".join(by)).alias("__ra_by"),
-    ]
+def _stamp(value_col: str, w_us: int, by: Sequence[str]) -> dict:
+    return {"col": value_col, "width_us": int(w_us), "by": list(by)}
 
 
 def rollup_store_update(
@@ -190,10 +186,9 @@ def rollup_store_update(
     value_col: str,
     width: str | int,
     by: Sequence[str] = (),
-    report: bool = True,
-) -> dict:
+) -> None:
     """Fold one batch into a persisted continuous-aggregate store
-    (catalog parquet table, the sketch-store staging-swap idiom).
+    (catalog parquet table, `io.store.fold_store`).
 
     Cost per fold: one map-side-combining scan of the BATCH plus a
     merge against the store's (buckets x groups) rows — history data is
@@ -201,60 +196,15 @@ def rollup_store_update(
     year squared. The store is stamped with its configuration and a
     fold under a different (value col, width, group cols) raises.
     Sum-merged state is NOT idempotent: fold each batch exactly once
-    (the CMS/histogram-store contract). Returns ``{"rows", "buckets"}``
-    — rows folded in this call and the store's bucket-row count after.
-
-    ``report=False`` skips the two statistics (returns None for both):
-    the batch count and the store read-back are one extra job each —
-    per fold, a third of the wall time — and the STORE is identical
-    either way; callers that fold pipelines and never read the dict
-    should pass False."""
+    (the CMS/histogram-store contract)."""
     by = list(by)
-    w_us = width_us(width)
-    if report:
-        # persist the bucket-cardinality batch rollup at the fork: the
-        # row count AND the staging write both consume it — without the
-        # cache every fold would scan the batch twice
-        batch = rollup(df, ts_col, value_col, width, by).persist()
-        n_batch = batch.agg(F.sum("n_rows")).first()[0] or 0
-    else:
-        # the staging write is the only consumer: no fork, no persist
-        batch = rollup(df, ts_col, value_col, width, by)
-        n_batch = None
-    stamped = batch.select("*", *_meta_cols(value_col, w_us, by))
-    # existence check, not a broad except: transient JVM errors must
-    # propagate, never be read as "store absent" (history reset)
-    if spark.catalog.tableExists(table):
-        existing = spark.table(table)
-        meta = existing.select("__ra_col", "__ra_width_us", "__ra_by").first()
-        if meta is not None and (
-            meta["__ra_col"] != value_col
-            or meta["__ra_width_us"] != w_us
-            or meta["__ra_by"] != ",".join(by)
-        ):
-            raise ValueError(
-                f"rollup store {table!r} was built with "
-                f"(col={meta['__ra_col']!r}, width_us="
-                f"{meta['__ra_width_us']}, by={meta['__ra_by']!r}); "
-                f"refusing to fold (col={value_col!r}, width_us={w_us}, "
-                f"by={','.join(by)!r})"
-            )
-        merged = rollup_merge(
-            existing.unionByName(stamped).drop(
-                "__ra_col", "__ra_width_us", "__ra_by"
-            ),
-            by,
-        ).select("*", *_meta_cols(value_col, w_us, by))
-    else:
-        merged = stamped
-    try:
-        staging_swap(spark, table, merged)
-    finally:
-        if report:
-            batch.unpersist()
-    if not report:
-        return {"rows": None, "buckets": None}
-    return {"rows": int(n_batch), "buckets": int(spark.table(table).count())}
+    fold_store(
+        spark,
+        table,
+        rollup(df, ts_col, value_col, width, by),
+        merge=lambda old, new: rollup_merge(old.unionByName(new), by),
+        stamp=_stamp(value_col, width_us(width), by),
+    )
 
 
 def rollup_serve(
@@ -264,37 +214,10 @@ def rollup_serve(
 ) -> DataFrame:
     """Finalize statistics from a persisted rollup store — the serving
     read touches only the store's calendar-bounded rows, never raw
-    data. Group columns recover from the STAMP when a row exists
-    (collision-proof: a group column may share a name with another
-    lane's state) and from the SCHEMA on an EMPTY store — possible
-    after folding an empty first batch — so the served frame is empty
-    but correctly shaped either way."""
-    store = spark.table(table)
-    return rollup_finalize(
-        store.drop("__ra_col", "__ra_width_us", "__ra_by"),
-        stats,
-        _recover_by(store),
-    )
-
-
-#: everything in a numeric-rollup store that is NOT a group column
-#: (schema-fallback lane only; the stamp wins whenever a row exists)
-_ROLLUP_FIXED = frozenset(
-    ("bucket_ts", "n_rows", "n", "s", "mn", "mx", "ss",
-     "__ra_col", "__ra_width_us", "__ra_by")
-)
-
-
-def _recover_by(store: DataFrame, extra_fixed: Sequence[str] = ()) -> list[str]:
-    """Group columns of a rollup store: the ``__ra_by`` stamp when the
-    store has rows (immune to group-column/state name collisions);
-    otherwise the schema minus bucket/state/meta, in schema order (the
-    fold's ``by`` order by construction)."""
-    meta = store.select("__ra_by").first()
-    if meta is not None:
-        return [c for c in (meta["__ra_by"] or "").split(",") if c]
-    fixed = _ROLLUP_FIXED | set(extra_fixed)
-    return [c for c in store.columns if c not in fixed]
+    data. Group columns come from the store's stamp, so an empty store
+    serves an empty but correctly shaped frame."""
+    by = store_stamp(spark, table)["by"]
+    return rollup_finalize(spark.table(table), stats, by)
 
 
 def rollup_distinct(
@@ -345,84 +268,42 @@ def rollup_distinct_store_update(
     by: Sequence[str] = (),
     p: int = 12,
     lane_hash: str = "xxhash64",
-    report: bool = True,
-) -> dict:
+) -> None:
     """Fold one batch into a persisted distinct-rollup store — the HLL
     twin of `rollup_store_update`, with one upgrade: register max-merge
     is IDEMPOTENT, so re-delivered batches cannot inflate the counts
     (exactly-once is NOT required, unlike the sum-merged numeric
     store). Store size is calendar-bounded at (buckets x groups x 2^p)
-    rows; config is stamped and a mismatched fold raises. Returns
-    ``{"registers", "buckets"}`` (both None under ``report=False``,
-    which skips the two read-back jobs — the store is identical)."""
+    rows; config is stamped and a mismatched fold raises."""
     from .sketch import hll_merge
 
     by = list(by)
-    w_us = width_us(width)
-    # ONE stamp definition: the batch select and the merged re-stamp
-    # must stay field-for-field identical or the mismatch check rots
-    stamp = [
-        F.lit(distinct_col).alias("__rd_col"),
-        F.lit(int(w_us)).alias("__rd_width_us"),
-        F.lit(",".join(by)).alias("__rd_by"),
-        F.lit(int(p)).alias("__rd_p"),
-        F.lit(lane_hash).alias("__rd_hash"),
-    ]
-    meta_cols = ["__rd_col", "__rd_width_us", "__rd_by", "__rd_p", "__rd_hash"]
-    batch = rollup_distinct(
-        df, ts_col, distinct_col, width, by, p, lane_hash
-    ).select("*", *stamp)
-    if spark.catalog.tableExists(table):
-        existing = spark.table(table)
-        meta = existing.select(*meta_cols).first()
-        want = (distinct_col, w_us, ",".join(by), p, lane_hash)
-        if meta is not None and tuple(meta) != want:
-            raise ValueError(
-                f"distinct-rollup store {table!r} was built with "
-                f"{tuple(meta)}; refusing to fold {want}"
-            )
-        merged = hll_merge(
-            existing.drop(*meta_cols),
-            batch.drop(*meta_cols),
-            key_cols=("bucket_ts", *by),
-        ).select("*", *stamp)
-    else:
-        merged = batch
-    staging_swap(spark, table, merged)
-    if not report:
-        return {"registers": None, "buckets": None}
-    out = spark.table(table)
-    return {
-        "registers": out.count(),
-        "buckets": out.select("bucket_ts", *by).distinct().count(),
-    }
+    fold_store(
+        spark,
+        table,
+        rollup_distinct(df, ts_col, distinct_col, width, by, p, lane_hash),
+        merge=lambda old, new: hll_merge(
+            old, new, key_cols=("bucket_ts", *by)
+        ),
+        stamp={
+            "col": distinct_col,
+            "width_us": width_us(width),
+            "by": by,
+            "p": int(p),
+            "hash": lane_hash,
+        },
+    )
 
 
 def rollup_distinct_serve_store(
     spark, table: str, p: int | None = None
 ) -> DataFrame:
-    """Estimates straight from a persisted distinct-rollup store.
-    Group columns recover from the ``__rd_by`` stamp when a row exists
-    (collision-proof) and from the SCHEMA on an EMPTY store — possible
-    after folding an empty first batch — so the served frame keeps its
-    group columns either way; ``p`` recovers from the stamp when
-    present (empty store: the default)."""
-    store = spark.table(table)
-    meta = store.select("__rd_by", "__rd_p").first()
-    if meta is not None:
-        by = [c for c in (meta["__rd_by"] or "").split(",") if c]
-    else:
-        fixed = (
-            "bucket_ts", "r", "maxrho",
-            "__rd_col", "__rd_width_us", "__rd_by", "__rd_p", "__rd_hash",
-        )
-        by = [c for c in store.columns if c not in fixed]
-    if p is None:
-        p = int(meta["__rd_p"]) if meta is not None else 12
+    """Estimates straight from a persisted distinct-rollup store. Group
+    columns and ``p`` (unless given) come from the store's stamp, so an
+    empty store serves an empty frame that keeps its group columns."""
+    stamp = store_stamp(spark, table)
     return rollup_distinct_serve(
-        store.drop("__rd_col", "__rd_width_us", "__rd_by", "__rd_p", "__rd_hash"),
-        by,
-        p,
+        spark.table(table), stamp["by"], stamp["p"] if p is None else p
     )
 
 
@@ -447,21 +328,14 @@ def rollup_store_refresh(
     match (same refusal as `rollup_store_update`). Returns
     ``{"replaced", "buckets"}``."""
     by = list(by)
-    w_us = width_us(width)
+    stamp = _stamp(value_col, width_us(width), by)
     if not spark.catalog.tableExists(table):
         raise ValueError(f"rollup store {table!r} does not exist")
-    existing = spark.table(table)
-    meta = existing.select("__ra_col", "__ra_width_us", "__ra_by").first()
-    if meta is not None and (
-        meta["__ra_col"] != value_col
-        or meta["__ra_width_us"] != w_us
-        or meta["__ra_by"] != ",".join(by)
-    ):
+    built = store_stamp(spark, table)
+    if built != stamp:
         raise ValueError(
-            f"rollup store {table!r} was built with "
-            f"(col={meta['__ra_col']!r}, width_us={meta['__ra_width_us']}, "
-            f"by={meta['__ra_by']!r}); refusing to refresh "
-            f"(col={value_col!r}, width_us={w_us}, by={','.join(by)!r})"
+            f"rollup store {table!r} was built with {built}; refusing to "
+            f"refresh {stamp}"
         )
     lo_c, hi_c = F.lit(lo).cast("timestamp"), F.lit(hi).cast("timestamp")
     in_range = (F.col("bucket_ts") >= lo_c) & (F.col("bucket_ts") < hi_c)
@@ -474,10 +348,15 @@ def rollup_store_refresh(
         value_col,
         width,
         by,
-    ).select("*", *_meta_cols(value_col, w_us, by))
-    kept = existing.filter(~in_range)
-    replaced = existing.filter(in_range).count()
-    staging_swap(spark, table, kept.unionByName(fresh))
+    )
+    replaced = spark.table(table).filter(in_range).count()
+    fold_store(
+        spark,
+        table,
+        fresh,
+        merge=lambda old, new: old.filter(~in_range).unionByName(new),
+        stamp=stamp,
+    )
     return {
         "replaced": int(replaced),
         "buckets": spark.table(table).count(),
@@ -538,66 +417,22 @@ def rollup_multi_store_update(
     value_cols: Sequence[str],
     width: str | int,
     by: Sequence[str] = (),
-    report: bool = True,
-) -> dict:
+) -> None:
     """Fold one batch's k-column partials into a persisted store — the
     `rollup_store_update` contract (stamped config, refuse-on-mismatch,
     sum-merge = fold each batch once, crash-safe swap) with the column
-    set in the stamp. Returns ``{"rows", "buckets"}`` (both None under
-    ``report=False``, which skips the two statistics jobs — the store
-    is identical)."""
+    set in the stamp."""
     by = list(by)
     cols = list(value_cols)
-    w_us = width_us(width)
-    sig = ",".join(cols)
-    if report:
-        batch = rollup_multi(df, ts_col, cols, width, by).persist()
-        n_batch = (
-            batch.filter(F.col("col") == cols[0]).agg(F.sum("n_rows")).first()[0]
-            or 0
-        )
-    else:
-        batch = rollup_multi(df, ts_col, cols, width, by)
-        n_batch = None
-    meta = [
-        F.lit(sig).alias("__ra_col"),
-        F.lit(int(w_us)).alias("__ra_width_us"),
-        F.lit(",".join(by)).alias("__ra_by"),
-    ]
-    stamped = batch.select("*", *meta)
-    if spark.catalog.tableExists(table):
-        existing = spark.table(table)
-        m = existing.select("__ra_col", "__ra_width_us", "__ra_by").first()
-        if m is not None and (
-            m["__ra_col"] != sig
-            or m["__ra_width_us"] != w_us
-            or m["__ra_by"] != ",".join(by)
-        ):
-            raise ValueError(
-                f"multi-rollup store {table!r} was built with "
-                f"(cols={m['__ra_col']!r}, width_us={m['__ra_width_us']}, "
-                f"by={m['__ra_by']!r}); refusing to fold "
-                f"(cols={sig!r}, width_us={w_us}, by={','.join(by)!r})"
-            )
-        merged = rollup_merge(
-            existing.unionByName(stamped).drop(
-                "__ra_col", "__ra_width_us", "__ra_by"
-            ),
-            [*by, "col"],
-        ).select("*", *meta)
-    else:
-        merged = stamped
-    try:
-        staging_swap(spark, table, merged)
-    finally:
-        if report:
-            batch.unpersist()
-    if not report:
-        return {"rows": None, "buckets": None}
-    return {
-        "rows": int(n_batch),
-        "buckets": int(spark.table(table).count()),
-    }
+    fold_store(
+        spark,
+        table,
+        rollup_multi(df, ts_col, cols, width, by),
+        merge=lambda old, new: rollup_merge(
+            old.unionByName(new), [*by, "col"]
+        ),
+        stamp={"cols": cols, "width_us": width_us(width), "by": by},
+    )
 
 
 def rollup_multi_serve(
@@ -606,13 +441,7 @@ def rollup_multi_serve(
     stats: Sequence[str] = ("count", "sum", "mean", "min", "max"),
 ) -> DataFrame:
     """Finalize the k-column store: ``(bucket_ts, *by, col, <stats>)``.
-    Group columns recover stamp-first with a schema fallback
-    (`rollup_serve`), so an empty store serves the correct empty
-    frame."""
-    store = spark.table(table)
-    by = _recover_by(store, extra_fixed=("col",))
-    return rollup_finalize(
-        store.drop("__ra_col", "__ra_width_us", "__ra_by"),
-        stats,
-        [*by, "col"],
-    )
+    Group columns come from the stamp (`rollup_serve`), so an empty
+    store serves the correct empty frame."""
+    by = store_stamp(spark, table)["by"]
+    return rollup_finalize(spark.table(table), stats, [*by, "col"])

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dataframes_spark.io.store import staging_swap
+from dataframes_spark.io.store import fold_store
 
 
 def hash_sample(df: DataFrame, key_col: str, fraction: float, salt: str = "") -> DataFrame:
@@ -363,36 +363,22 @@ def weighted_store_update(
     key_col: str,
     k: int,
     stratum_col: str | None = None,
-) -> dict:
+) -> None:
     """Fold a batch's `weighted_sample_topk` frame into a persisted
-    weighted sample store (catalog parquet table, the staging-swap idiom
-    of the sketch stores): an always-current weight-proportional
+    weighted sample store (catalog parquet table,
+    `io.store.fold_store`): an always-current weight-proportional
     without-replacement sample of everything ever folded in, at most
     ``strata x k`` rows, updated in O(batch) — the quality-weighted
     eyeball/eval set a corpus pipeline keeps fresh without rescanning
-    history. Idempotent under batch refolds. Returns ``{"rows",
-    "strata"}``."""
-    # existence check, not a broad except: transient JVM errors must
-    # propagate, never be read as "store absent" (history reset)
-    if spark.catalog.tableExists(table):
-        merged = weighted_sample_merge(
-            spark.table(table), batch_frame, key_col=key_col, k=k,
-            stratum_col=stratum_col,
-        )
-    else:
-        merged = batch_frame
-    staging_swap(spark, table, merged)
-    out = spark.table(table)
-    rows = out.count()
-    strata = (
-        out.select(stratum_col).distinct().count() if stratum_col else min(rows, 1)
+    history. Idempotent under batch refolds."""
+    fold_store(
+        spark,
+        table,
+        batch_frame,
+        merge=lambda old, new: weighted_sample_merge(
+            old, new, key_col=key_col, k=k, stratum_col=stratum_col
+        ),
     )
-    return {"rows": rows, "strata": strata}
-
-
-def weighted_store_read(spark, table: str) -> DataFrame:
-    """Read a persisted weighted sample store for further folding."""
-    return spark.table(table)
 
 
 def temperature_rates(

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dataframes_spark.io.store import staging_swap
+from dataframes_spark.io.store import fold_store
 
 
 def _bucket(col: Column, row: int, width: int, lane_hash: str) -> Column:
@@ -155,37 +155,15 @@ def cms_estimate(
     )
 
 
-def cms_store_update(spark, table: str, batch_sketch: DataFrame) -> dict:
+def cms_store_update(spark, table: str, batch_sketch: DataFrame) -> None:
     """Fold a batch's sketch into a persisted CMS store (catalog parquet
-    table, same staging-swap idiom as ``io.bucketed.compact_store``) —
-    the incremental-epoch loop: sketch each arriving batch (one scan of
-    the batch, never of history), ``cms_merge`` it with the stored
-    cells, swap. The store is AT MOST depth*width rows no matter how
-    many epochs fold in, so the update is a constant-size job and the
-    store never needs compaction. Not transactional: run between
-    increments, like the other stores. Returns ``{"cells", "total"}``
-    (non-zero cells and the stream length folded so far — cnt sums in
-    any one hash row equal the total stream length)."""
-    # explicit existence check, NOT a broad except around spark.table:
-    # a transient JVM/connection error must propagate, never be read as
-    # "store absent" (which would silently discard all folded history)
-    if spark.catalog.tableExists(table):
-        merged = cms_merge(spark.table(table), batch_sketch)
-    else:
-        merged = batch_sketch
-    staging_swap(spark, table, merged)
-    out = spark.table(table)
-    cells = out.count()
-    total = (
-        out.filter(F.col("d") == 0).agg(F.sum("cnt").alias("t")).first()["t"]
-    )
-    return {"cells": cells, "total": int(total or 0)}
-
-
-def cms_store_read(spark, table: str) -> DataFrame:
-    """Read a persisted CMS cell store (``(d, bucket, cnt)``) for
-    `cms_estimate` / `heavy_hitters` probing."""
-    return spark.table(table)
+    table, `io.store.fold_store`) — the incremental-epoch loop: sketch
+    each arriving batch (one scan of the batch, never of history),
+    ``cms_merge`` it with the stored cells, swap. The store is AT MOST
+    depth*width rows no matter how many epochs fold in, so the update
+    is a constant-size job and the store never needs compaction. Not
+    transactional: run between increments, like the other stores."""
+    fold_store(spark, table, batch_sketch, merge=cms_merge)
 
 
 def heavy_hitters(
@@ -375,34 +353,20 @@ def hll_store_update(
     table: str,
     batch_registers: DataFrame,
     key_cols: tuple[str, ...] = (),
-) -> dict:
+) -> None:
     """Fold a batch's register frame into a persisted HLL store (catalog
-    parquet table, staging-swap idiom shared with `cms_store_update`):
-    sketch each arriving batch (one scan of the batch, never of
-    history), `hll_merge` with the stored registers, swap. The store is
-    at most ``keys x 2^p`` rows however many epochs fold in, and because
-    merge is max (idempotent), re-running a batch is harmless. Not
-    transactional: run between increments, like the other stores.
-    Returns ``{"registers", "keys"}``."""
-    # existence check, not a broad except: transient JVM errors must
-    # propagate, never be read as "store absent" (history reset)
-    if spark.catalog.tableExists(table):
-        merged = hll_merge(spark.table(table), batch_registers, key_cols=key_cols)
-    else:
-        merged = batch_registers
-    staging_swap(spark, table, merged)
-    out = spark.table(table)
-    registers = out.count()
-    keys = (
-        out.select(*key_cols).distinct().count() if key_cols else min(registers, 1)
+    parquet table, `io.store.fold_store`): sketch each arriving batch
+    (one scan of the batch, never of history), `hll_merge` with the
+    stored registers, swap. The store is at most ``keys x 2^p`` rows
+    however many epochs fold in, and because merge is max (idempotent),
+    re-running a batch is harmless. Not transactional: run between
+    increments, like the other stores."""
+    fold_store(
+        spark,
+        table,
+        batch_registers,
+        merge=lambda old, new: hll_merge(old, new, key_cols=key_cols),
     )
-    return {"registers": registers, "keys": keys}
-
-
-def hll_store_read(spark, table: str) -> DataFrame:
-    """Read a persisted HLL register store for `hll_estimate` /
-    further `hll_merge` folding."""
-    return spark.table(table)
 
 
 def hll_pairwise_overlap(
@@ -610,33 +574,19 @@ def bottomk_store_update(
     id_col: str,
     k: int,
     key_cols: tuple[str, ...] = (),
-) -> dict:
+) -> None:
     """Fold a batch's bottom-k frame into a persisted sample store
-    (catalog parquet table, the staging-swap idiom of the other sketch
-    stores): an always-current deterministic uniform sample of
-    EVERYTHING ever folded in, at most ``keys x k`` rows, maintained in
-    O(batch) per epoch — the sample every profiling/debugging/eyeball
-    loop wants without rescanning a 100 TB corpus. Idempotent under
-    batch re-folds (dedup on id inside the merge). Returns
-    ``{"rows", "keys"}``."""
-    # existence check, not a broad except: transient JVM errors must
-    # propagate, never be read as "store absent" (history reset)
-    if spark.catalog.tableExists(table):
-        merged = bottomk_merge(
-            spark.table(table), batch_frame, id_col=id_col, k=k, key_cols=key_cols
-        )
-    else:
-        merged = batch_frame
-    staging_swap(spark, table, merged)
-    out = spark.table(table)
-    rows = out.count()
-    keys = (
-        out.select(*key_cols).distinct().count() if key_cols else min(rows, 1)
+    (catalog parquet table, `io.store.fold_store`): an always-current
+    deterministic uniform sample of EVERYTHING ever folded in, at most
+    ``keys x k`` rows, maintained in O(batch) per epoch — the sample
+    every profiling/debugging/eyeball loop wants without rescanning a
+    100 TB corpus. Idempotent under batch re-folds (dedup on id inside
+    the merge)."""
+    fold_store(
+        spark,
+        table,
+        batch_frame,
+        merge=lambda old, new: bottomk_merge(
+            old, new, id_col=id_col, k=k, key_cols=key_cols
+        ),
     )
-    return {"rows": rows, "keys": keys}
-
-
-def bottomk_store_read(spark, table: str) -> DataFrame:
-    """Read a persisted bottom-k sample store for further folding or
-    `bottomk_quantiles` estimation."""
-    return spark.table(table)

@@ -37,7 +37,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dataframes_spark.io.store import staging_swap
+from dataframes_spark.io.store import fold_store, store_stamp
 
 
 @dataclass(frozen=True)
@@ -418,6 +418,13 @@ def drift_gate(
     return {"psi": psi, "passed": psi <= max_psi}
 
 
+def _sum_n(keys: list[str]):
+    """Count-store merge: sum ``n`` per key (CMS semantics)."""
+    return lambda old, new: (
+        old.unionByName(new).groupBy(*keys).agg(F.sum("n").alias("n"))
+    )
+
+
 def hist_store_update(
     spark,
     table: str,
@@ -426,57 +433,28 @@ def hist_store_update(
     bins: int,
     lo: float,
     hi: float,
-) -> dict:
+) -> None:
     """Fold a batch's bin counts into a persisted histogram store
-    (catalog parquet table, the sketch-store staging-swap idiom) — the
-    reference side of an INCREMENTAL drift gate: production pipelines
-    keep the reference HISTOGRAM, not the reference data, so each epoch
-    costs one scan of the batch and the store stays ``bins`` rows
-    forever. ``lo``/``hi``/``bins`` are REQUIRED and stamped into the
-    store; an update with different binning raises (bins that change
-    meaning between epochs would make every stored count wrong).
-    Counts sum-merge (CMS semantics: NOT idempotent — fold each batch
-    exactly once). Returns ``{"n"}`` (total rows folded in)."""
+    (catalog parquet table, `io.store.fold_store`) — the reference side
+    of an INCREMENTAL drift gate: production pipelines keep the
+    reference HISTOGRAM, not the reference data, so each epoch costs
+    one scan of the batch and the store stays ``bins`` rows forever.
+    ``lo``/``hi``/``bins`` are REQUIRED and stamped on the store; an
+    update with different binning raises (bins that change meaning
+    between epochs would make every stored count wrong). Counts
+    sum-merge (CMS semantics: NOT idempotent — fold each batch exactly
+    once)."""
     if bins < 2:
         raise ValueError(f"need bins >= 2, got {bins}")
     if not hi > lo:
         raise ValueError(f"need hi > lo, got [{lo}, {hi}]")
-    batch = _binned_counts(df, col, bins, float(lo), float(hi), "n").select(
-        "bin",
-        "n",
-        F.lit(col).alias("col"),
-        F.lit(int(bins)).alias("bins"),
-        F.lit(float(lo)).alias("lo"),
-        F.lit(float(hi)).alias("hi"),
+    fold_store(
+        spark,
+        table,
+        _binned_counts(df, col, bins, float(lo), float(hi), "n"),
+        merge=_sum_n(["bin"]),
+        stamp={"col": col, "bins": int(bins), "lo": float(lo), "hi": float(hi)},
     )
-    # existence check, not a broad except: transient JVM errors must
-    # propagate, never be read as "store absent" (history reset)
-    if spark.catalog.tableExists(table):
-        existing = spark.table(table)
-        meta = existing.select("col", "bins", "lo", "hi").first()
-        if meta is not None and (
-            meta["col"] != col
-            or meta["bins"] != bins
-            or meta["lo"] != float(lo)
-            or meta["hi"] != float(hi)
-        ):
-            raise ValueError(
-                f"histogram store {table!r} was built with "
-                f"(col={meta['col']!r}, bins={meta['bins']}, "
-                f"lo={meta['lo']}, hi={meta['hi']}); refusing to fold "
-                f"(col={col!r}, bins={bins}, lo={lo}, hi={hi})"
-            )
-        merged = (
-            existing.unionByName(batch)
-            .groupBy("bin", "col", "bins", "lo", "hi")
-            .agg(F.sum("n").alias("n"))
-            .select("bin", "n", "col", "bins", "lo", "hi")
-        )
-    else:
-        merged = batch
-    staging_swap(spark, table, merged)
-    n = spark.table(table).agg(F.sum("n")).first()[0]
-    return {"n": int(n or 0)}
 
 
 def drift_psi_from_store(
@@ -486,11 +464,8 @@ def drift_psi_from_store(
     the incremental form: the reference side reads ``bins`` rows, the
     batch side is one scan, and the store's stamped (col, bins, lo, hi)
     guarantee both sides bin identically."""
-    store = spark.table(table)
-    meta = store.select("col", "bins", "lo", "hi").first()
-    if meta is None:
-        raise ValueError(f"histogram store {table!r} is empty")
-    rc = store.select("bin", F.col("n").alias("n_ref"))
+    meta = store_stamp(spark, table)
+    rc = spark.table(table).select("bin", F.col("n").alias("n_ref"))
     cc = _binned_counts(
         cur, meta["col"], meta["bins"], meta["lo"], meta["hi"], "n_cur"
     )
@@ -614,20 +589,17 @@ def _psi_report_multi(
 
 def hist_store_update_multi(
     spark, table: str, df: DataFrame, specs: dict, bins: int = 10
-) -> dict:
+) -> None:
     """Fold a batch's k-column binned counts into ONE persisted
-    multi-column histogram store (rows ``(col, bin, n, bins, lo, hi)``,
-    the staging-swap idiom of `hist_store_update`): the batch costs ONE
-    scan for all k columns (`_multi_cells`), the merged store stays at
-    most ``k * bins`` rows however many epochs fold in, and each
-    column's stamped (bins, lo, hi) guarantees every epoch binned
-    identically — the store refuses to fold a mismatched spec (changed
-    bounds silently corrupt a histogram sum). One store backs the whole
+    multi-column histogram store (rows ``(col, bin, n)``,
+    `io.store.fold_store`): the batch costs ONE scan for all k columns
+    (`_multi_cells`), the merged store stays at most ``k * bins`` rows
+    however many epochs fold in, and the stamped per-column
+    ``(lo, hi)`` and ``bins`` guarantee every epoch binned identically
+    — the store refuses to fold a mismatched spec (changed bounds
+    silently corrupt a histogram sum). One store backs the whole
     k-column drift gate (`drift_psi_multi_from_store`), where the
-    single-column `hist_store_update` needed k stores and k scans.
-    Returns ``{"n"}`` (total cells folded per column on average is
-    irrelevant — n is the row count folded so far for the FIRST listed
-    column, the shared denominator check)."""
+    single-column `hist_store_update` needed k stores and k scans."""
     if not specs:
         raise ValueError("specs must map at least one column to (lo, hi)")
     if bins < 2:
@@ -635,48 +607,16 @@ def hist_store_update_multi(
     for c, (lo, hi) in specs.items():
         if not float(hi) > float(lo):
             raise ValueError(f"need hi > lo for {c!r}, got [{lo}, {hi}]")
-    meta_rows = spark.createDataFrame(
-        [(c, int(bins), float(lo), float(hi)) for c, (lo, hi) in specs.items()],
-        "col string, bins int, lo double, hi double",
+    fold_store(
+        spark,
+        table,
+        _multi_cells(df, specs, bins, "n"),
+        merge=_sum_n(["col", "bin"]),
+        stamp={
+            "bins": int(bins),
+            "specs": {c: [float(lo), float(hi)] for c, (lo, hi) in specs.items()},
+        },
     )
-    batch = _multi_cells(df, specs, bins, "n").join(
-        F.broadcast(meta_rows), "col"
-    ).select("col", "bin", "n", "bins", "lo", "hi")
-    # existence check, not a broad except: transient JVM errors must
-    # propagate, never be read as "store absent" (history reset)
-    if spark.catalog.tableExists(table):
-        existing = spark.table(table)
-        stamped = {
-            r["col"]: (r["bins"], r["lo"], r["hi"])
-            for r in existing.select("col", "bins", "lo", "hi")
-            .distinct()
-            .collect()
-        }
-        asked = {
-            c: (int(bins), float(lo), float(hi)) for c, (lo, hi) in specs.items()
-        }
-        if stamped and stamped != asked:
-            raise ValueError(
-                f"multi-histogram store {table!r} was built with "
-                f"{stamped}; refusing to fold {asked}"
-            )
-        merged = (
-            existing.unionByName(batch)
-            .groupBy("col", "bin", "bins", "lo", "hi")
-            .agg(F.sum("n").alias("n"))
-            .select("col", "bin", "n", "bins", "lo", "hi")
-        )
-    else:
-        merged = batch
-    staging_swap(spark, table, merged)
-    first_col = next(iter(specs))
-    n = (
-        spark.table(table)
-        .filter(F.col("col") == first_col)
-        .agg(F.sum("n"))
-        .first()[0]
-    )
-    return {"n": int(n or 0)}
 
 
 def drift_psi_multi_from_store(
@@ -685,21 +625,12 @@ def drift_psi_multi_from_store(
     """`drift_psi_multi` of ``cur`` against ONE persisted multi-column
     histogram store — the incremental k-column gate: the reference side
     reads ``k * bins`` rows, the batch side is ONE scan for all k
-    columns, and the store's stamped per-column (bins, lo, hi)
+    columns, and the store's stamped per-column (lo, hi) and bins
     guarantee both sides bin identically. Store-backed == two-frame by
     construction (same cells, same report arithmetic)."""
-    store = spark.table(table)
-    meta = store.select("col", "bins", "lo", "hi").distinct().collect()
-    if not meta:
-        raise ValueError(f"multi-histogram store {table!r} is empty")
-    bins_set = {r["bins"] for r in meta}
-    if len(bins_set) != 1:
-        raise ValueError(
-            f"multi-histogram store {table!r} has inconsistent bins {bins_set}"
-        )
-    bins = bins_set.pop()
-    specs = {r["col"]: (r["lo"], r["hi"]) for r in meta}
-    rc = store.select("col", "bin", F.col("n").alias("n_ref"))
+    meta = store_stamp(spark, table)
+    bins, specs = meta["bins"], meta["specs"]
+    rc = spark.table(table).select("col", "bin", F.col("n").alias("n_ref"))
     cc = _multi_cells(cur, specs, bins, "n_cur")
     return _psi_report_multi(spark, rc, cc, list(specs), bins, smoothing)
 
@@ -840,27 +771,21 @@ def drift_gate_categorical(
 
 def cat_hist_store_update(
     spark, table: str, df: DataFrame, col: str, categories: list
-) -> dict:
+) -> None:
     """Fold a batch's categorical counts into a persisted category
-    histogram store (rows ``(category, n, col, cats_md5)``, the
-    staging-swap idiom): at most ``len(categories) + 1`` rows however
-    many epochs fold in. The store is stamped with the column name and
-    an md5 of the SORTED category set and refuses to fold a mismatched
-    gate (a changed category set silently corrupts bucket sums — the
-    same guard as the numeric store's (bins, lo, hi) stamp). Explicit
-    categories are required: a per-epoch top-k would re-derive
-    different buckets per fold. Returns ``{"n"}``."""
-    import hashlib
-
+    histogram store (rows ``(category, n)``, `io.store.fold_store`): at
+    most ``len(categories) + 1`` rows however many epochs fold in. The
+    store is stamped with the column name and the SORTED category set
+    and refuses to fold a mismatched gate (a changed category set
+    silently corrupts bucket sums — the same guard as the numeric
+    store's (bins, lo, hi) stamp). Explicit categories are required: a
+    per-epoch top-k would re-derive different buckets per fold."""
     if not categories:
         raise ValueError("categories must be non-empty")
     if len(set(categories)) != len(categories):
         raise ValueError("categories must be distinct")
     if OTHER_BUCKET in categories:
         raise ValueError(f"{OTHER_BUCKET!r} is the reserved overflow bucket")
-    stamp = hashlib.md5(
-        "\x1f".join(sorted(str(c) for c in categories)).encode()
-    ).hexdigest()
     cats = spark.createDataFrame([(str(c),) for c in categories], "__v string")
     # persist the FULL spine (every category + __other__, zeros
     # included): the read side derives the category set from the store
@@ -869,38 +794,16 @@ def cat_hist_store_update(
     spine = cats.select(F.col("__v").alias("category")).unionByName(
         spark.createDataFrame([(OTHER_BUCKET,)], "category string")
     )
-    batch = (
-        spine.join(F.broadcast(_categorical_counts(df, col, cats, "n")),
-                   "category", "left")
-        .select(
-            "category",
-            F.coalesce("n", F.lit(0)).alias("n"),
-            F.lit(col).alias("col"),
-            F.lit(stamp).alias("cats_md5"),
-        )
+    batch = spine.join(
+        F.broadcast(_categorical_counts(df, col, cats, "n")), "category", "left"
+    ).select("category", F.coalesce("n", F.lit(0)).alias("n"))
+    fold_store(
+        spark,
+        table,
+        batch,
+        merge=_sum_n(["category"]),
+        stamp={"col": col, "categories": sorted(str(c) for c in categories)},
     )
-    # existence check, not a broad except: transient JVM errors must
-    # propagate, never be read as "store absent" (history reset)
-    if spark.catalog.tableExists(table):
-        existing = spark.table(table)
-        meta = existing.select("col", "cats_md5").first()
-        if meta is not None and (meta["col"] != col or meta["cats_md5"] != stamp):
-            raise ValueError(
-                f"categorical store {table!r} was built with "
-                f"(col={meta['col']!r}, cats_md5={meta['cats_md5']}); "
-                f"refusing to fold (col={col!r}, cats_md5={stamp})"
-            )
-        merged = (
-            existing.unionByName(batch)
-            .groupBy("category", "col", "cats_md5")
-            .agg(F.sum("n").alias("n"))
-            .select("category", "n", "col", "cats_md5")
-        )
-    else:
-        merged = batch
-    staging_swap(spark, table, merged)
-    n = spark.table(table).agg(F.sum("n")).first()[0]
-    return {"n": int(n or 0)}
 
 
 def drift_psi_categorical_from_store(
@@ -912,15 +815,12 @@ def drift_psi_categorical_from_store(
     guarantees both sides bucket identically. Store-backed == two-frame
     with the same explicit categories, by construction."""
     store = spark.table(table)
-    meta = store.select("col", "cats_md5").first()
-    if meta is None:
-        raise ValueError(f"categorical store {table!r} is empty")
     cats = (
         store.filter(F.col("category") != OTHER_BUCKET)
         .select(F.col("category").alias("__v"))
     )
     rc = store.select("category", F.col("n").alias("n_ref"))
-    cc = _categorical_counts(cur, meta["col"], cats, "n_cur")
+    cc = _categorical_counts(cur, store_stamp(spark, table)["col"], cats, "n_cur")
     spine = cats.select(F.col("__v").alias("category")).unionByName(
         spark.createDataFrame([(OTHER_BUCKET,)], "category string")
     )

@@ -1,7 +1,7 @@
 """SparkSession bootstrap.
 
-Defaults are tuned so the same code is correct on ``local[32]`` (the test
-harness) and on a large cluster: AQE handles runtime re-planning and skew,
+Defaults are tuned so the same code is correct on a local session and on a
+large cluster: AQE handles runtime re-planning and skew,
 shuffle partitions default to the local core count but should be overridden
 (or left to AQE coalescing) on a real cluster, and Arrow is enabled so any
 Pandas-UDF escape hatch moves data in columnar batches.
@@ -13,7 +13,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+#: local parallelism: ``SPARK_GRAFT_CPUS`` when set, else the CPUs this
+#: process may run on (a fixed ``local[32]`` oversubscribed small hosts)
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(
+    len(os.sched_getaffinity(0))
+)
 
 
 def get_spark(app_name: str = "dataframes_spark", cpus: str | None = None) -> SparkSession:
@@ -46,7 +50,7 @@ def get_spark(app_name: str = "dataframes_spark", cpus: str | None = None) -> Sp
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
         # Janino compiles one class per distinct generated-code shape and
         # Spark keeps them in an LRU cache (a static conf, default 100
         # entries). One pass over every entry.queries() query compiles

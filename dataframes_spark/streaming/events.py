@@ -623,9 +623,10 @@ def span_dedup_each_batch(
     Per-batch cost is the span store's contract: the batch hashes once
     (map-only), history joins as-scanned through the ``wh``-bucketed
     table, and the fold APPENDS only the batch's fresh hashes (bucketed
-    append, no history rewrite — run ``io.bucketed.compact_span_store``
-    periodically to fold small files). Nothing rescans history, so the
-    gate's cost is independent of how much the stream has ingested.
+    append, no history rewrite — run ``io.bucketed.compact_store`` with
+    key ``wh`` periodically to fold small files). Nothing rescans
+    history, so the gate's cost is independent of how much the stream
+    has ingested.
 
     Stream == batch: replaying the same batches through this callback
     yields exactly ``duplicate_spans_incremental`` fold-by-fold (pinned
@@ -695,7 +696,8 @@ def dsir_select_each_batch(
     data selection in the ingest path.
 
     The TARGET store is fixed reference data: seed it up front with
-    ``dsir_store_update(spark, target_table, bucket_counts(target,...))``.
+    ``dsir_store_update(spark, target_table, bucket_counts(target, ...),
+    buckets)``.
     The RAW store tracks everything the stream has seen: with
     ``update_raw_store=True`` each batch's bucket counts fold in BEFORE
     scoring, so the raw model is exactly the one-shot model over all
@@ -774,7 +776,14 @@ def transitions_each_batch(
     this batch, computed on the fly) but nothing persists."""
     from pyspark.sql import Window as W
 
-    from dataframes_spark.io.store import staging_swap
+    from dataframes_spark.io.store import fold_store
+
+    def sum_counts(old: DataFrame, new: DataFrame) -> DataFrame:
+        return (
+            old.unionByName(new)
+            .groupBy("prev_type", "next_type")
+            .agg(F.sum("n").alias("n"))
+        )
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -809,21 +818,9 @@ def transitions_each_batch(
         batch_counts = pairs.groupBy("prev_type", "next_type").agg(
             F.count(F.lit(1)).alias("n")
         )
-        # counts store: |types|^2 rows, sum-merge. The merged view is
-        # built regardless of update_stores: with update_stores=False the
-        # sink still receives the CURRENT cumulative matrix (store +
-        # this batch) — it just isn't persisted (dry-run / shadow mode).
-        if spark.catalog.tableExists(counts_table):
-            merged = (
-                spark.table(counts_table)
-                .unionByName(batch_counts)
-                .groupBy("prev_type", "next_type")
-                .agg(F.sum("n").alias("n"))
-            )
-        else:
-            merged = batch_counts
+        # counts store: |types|^2 rows, sum-merge
         if update_stores:
-            staging_swap(spark, counts_table, merged)
+            fold_store(spark, counts_table, batch_counts, merge=sum_counts)
             # last-event store: one row per user ever seen; the batch's
             # per-user LAST event wins over the stored one (in-order law)
             lasts = lagged.withColumn(
@@ -834,23 +831,26 @@ def transitions_each_batch(
                     )
                 ),
             ).filter(F.col("__rnd") == 1).select("__u", "__e")
-            if spark.catalog.tableExists(last_table):
-                prior = spark.table(last_table)
-                upd = (
-                    prior.join(lasts.select("__u"), "__u", "left_anti")
-                    .unionByName(lasts)
-                )
-            else:
-                upd = lasts
-            staging_swap(spark, last_table, upd)
-        if write is not None:
-            # after a swap, read the persisted table (stable files); in
-            # shadow mode hand the sink the unpersisted merged view —
-            # never a stale or missing counts_table
-            write(
-                spark.table(counts_table) if update_stores else merged,
-                epoch_id,
+            fold_store(
+                spark,
+                last_table,
+                lasts,
+                merge=lambda prior, new: prior.join(
+                    new.select("__u"), "__u", "left_anti"
+                ).unionByName(new),
             )
+            if write is not None:
+                # after a swap, read the persisted table (stable files)
+                write(spark.table(counts_table), epoch_id)
+        elif write is not None:
+            # shadow mode: the sink still receives the CURRENT cumulative
+            # matrix (store + this batch), unpersisted
+            shadow = (
+                sum_counts(spark.table(counts_table), batch_counts)
+                if spark.catalog.tableExists(counts_table)
+                else batch_counts
+            )
+            write(shadow, epoch_id)
 
     return _apply
 
@@ -877,20 +877,20 @@ def funnel_each_batch(
     state, and one staging swap. ``write(report_df, epoch_id)`` receives
     the k-row cumulative funnel report derived from the updated state
     (`funnel_report_from_stages`)."""
-    from dataframes_spark.io.store import staging_swap
+    from dataframes_spark.io.store import fold_store
     from dataframes_spark.operators import funnel as fn
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        init = (
-            spark.table(state_table)
-            if spark.catalog.tableExists(state_table)
-            else None
+
+        def stage(init):
+            return fn.funnel_stage(
+                batch_df, steps, user_col, type_col, ts_col, init=init
+            )
+
+        fold_store(
+            spark, state_table, stage(None), merge=lambda state, _: stage(state)
         )
-        new_state = fn.funnel_stage(
-            batch_df, steps, user_col, type_col, ts_col, init=init
-        )
-        staging_swap(spark, state_table, new_state)
         if write is not None:
             write(
                 fn.funnel_report_from_stages(spark.table(state_table), steps),
@@ -1096,7 +1096,7 @@ def cluster_each_batch(
     contract as `near_dup_incremental`; thread a `jaccard_verify`
     stage between steps 1 and 2 when band collisions must be confirmed
     against document text."""
-    from dataframes_spark.io.bucketed import read_lsh_store, write_lsh_store
+    from dataframes_spark.io.bucketed import write_lsh_store
     from dataframes_spark.operators import dedup as D
     from dataframes_spark.operators import graph as G
 
@@ -1104,7 +1104,7 @@ def cluster_each_batch(
         spark = batch_df.sparkSession
         exists = spark.catalog.tableExists(lsh_table)
         store = (
-            read_lsh_store(spark, lsh_table)
+            spark.table(lsh_table)
             if exists
             else D.lsh_bucket_store(
                 batch_df.limit(0), text_col, id_col,
@@ -1129,7 +1129,7 @@ def cluster_each_batch(
         if write is not None:
             ids = batch_df.select(F.col(id_col).alias("id"))
             assigned = ids.join(
-                G.read_cluster_store(spark, cluster_table), "id", "left"
+                spark.table(cluster_table), "id", "left"
             ).select(
                 "id", F.coalesce("component", F.col("id")).alias("component")
             )
@@ -1240,29 +1240,25 @@ def url_dedup_each_batch(
     pre-seeded store was built with (a store canonicalized under
     different flags would silently split the key space)."""
     from dataframes_spark.functions import url as U
-    from dataframes_spark.io.store import staging_swap
+    from dataframes_spark.io.store import fold_store
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        if not spark.catalog.tableExists(table):
-            staging_swap(
-                spark,
-                table,
-                U.url_fingerprints(
-                    batch_df.limit(0), url_col, strip_www, sort_query
-                ),
-                bucket_by="url",
-                num_buckets=num_buckets,
+        seen = (
+            spark.table(table)
+            if spark.catalog.tableExists(table)
+            else U.url_fingerprints(
+                batch_df.limit(0), url_col, strip_www, sort_query
             )
+        )
         fresh, updated = U.url_dedup_incremental(
-            batch_df, spark.table(table), url_col, id_col,
-            strip_www, sort_query,
+            batch_df, seen, url_col, id_col, strip_www, sort_query
         )
         # the fresh rows must be decided BEFORE the store moves (they
         # read it); the swap materializes updated first, so writers see
-        # old-or-new, never partial (the staging_swap contract)
+        # old-or-new, never partial (the fold_store contract)
         out = fresh.localCheckpoint(eager=True)
-        staging_swap(
+        fold_store(
             spark, table, updated, bucket_by="url", num_buckets=num_buckets
         )
         if write is not None:

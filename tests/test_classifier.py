@@ -145,7 +145,7 @@ def test_store_roundtrip_and_stamp(spark):
         classifier_store_update,
         score_quality_from_store,
     )
-    from dataframes_spark.io.store import drop_table_and_location
+    from dataframes_spark.io.store import drop_table_and_location, store_stamp
 
     t = "t_qc_store"
     drop_table_and_location(spark, t)
@@ -153,10 +153,16 @@ def test_store_roundtrip_and_stamp(spark):
         [(i, (i * 37 % 21 - 10) / 10.0) for i in range(8)],
         "bucket int, weight double",
     )
-    out = classifier_store_update(
+    classifier_store_update(
         spark, t, weights, bias=0.5, dim=8, lane_hash="md5"
     )
-    assert out["buckets"] == 8
+    # the store is the weight relation itself: no stamp columns, no
+    # sentinel row; the featurization config is the table's stamp
+    assert spark.table(t).columns == ["bucket", "weight"]
+    assert spark.table(t).count() == 8
+    assert store_stamp(spark, t) == {
+        "bias": 0.5, "dim": 8, "salt": "qc", "hash": "md5",
+    }
     df = _docs(spark, [(1, "a a b"), (2, "")])
     direct = {
         r.doc_id: r.quality_prob
@@ -171,10 +177,11 @@ def test_store_roundtrip_and_stamp(spark):
         ).collect()
     }
     assert stored == direct and len(stored) == 2
-    # retrain REPLACES: new weights, new stamp (+ the bias sentinel)
+    # retrain REPLACES: new weights, new stamp
     w2 = spark.createDataFrame([(0, 1.0)], "bucket int, weight double")
-    out2 = classifier_store_update(spark, t, w2, bias=0.0, dim=4)
-    assert out2["buckets"] == 1 and spark.table(t).count() == 2
+    classifier_store_update(spark, t, w2, bias=0.0, dim=4)
+    assert spark.table(t).count() == 1
+    assert store_stamp(spark, t)["dim"] == 4
     # a ZERO-weight model stays servable: bias-only scoring
     import math
 

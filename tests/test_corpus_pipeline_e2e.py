@@ -78,7 +78,7 @@ def test_corpus_prep_pipeline(spark, sf_dir, tmp_path):
     # 3. exact dedup, then near-dup clustering with keep-one pullback
     exact = exact_dedup(gated, "text", "doc_id")
     pairs = near_dup_pairs(
-        exact, "text", "doc_id", min_jaccard=0.8, shingle_k=4, materialize=True
+        exact, "text", "doc_id", min_jaccard=0.8, shingle_k=4
     )
     unique = dedup_representatives(exact, pairs, "doc_id")
 

@@ -144,11 +144,12 @@ def test_store_fold_equals_one_shot_fit(spark, sf_dir):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     a = docs.filter("doc_id % 2 = 0")
     b = docs.filter("doc_id % 2 = 1")
-    r1 = dsir.dsir_store_update(
-        spark, raw_t, dsir.bucket_counts(a, "text", "doc_id", buckets=32), 32)
-    r2 = dsir.dsir_store_update(
-        spark, raw_t, dsir.bucket_counts(b, "text", "doc_id", buckets=32), 32)
-    assert r2["total"] > r1["total"] and r2["buckets"] <= 32
+    for half in (a, b):
+        dsir.dsir_store_update(
+            spark, raw_t,
+            dsir.bucket_counts(half, "text", "doc_id", buckets=32), 32)
+    raw = spark.table(raw_t)
+    assert raw.columns == ["bucket", "c"] and raw.count() <= 32
     for half in (a, b):
         dsir.dsir_store_update(
             spark, tgt_t,
@@ -165,7 +166,7 @@ def test_store_fold_equals_one_shot_fit(spark, sf_dir):
     # asking for B=64 (either would silently drop / zero buckets)
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="buckets=32"):
+    with _pytest.raises(ValueError, match="refusing to fold"):
         dsir.dsir_store_update(
             spark, raw_t,
             dsir.bucket_counts(a, "text", "doc_id", buckets=64), 64)

@@ -72,7 +72,7 @@ def test_train_and_score_multiclass(spark):
 
 
 def test_store_roundtrip_and_hygiene(spark):
-    from dataframes_spark.io.store import drop_table_and_location
+    from dataframes_spark.io.store import drop_table_and_location, store_stamp
 
     df = _corpus(spark, n=20)
     w, b = L.train_langid(
@@ -81,8 +81,11 @@ def test_store_roundtrip_and_hygiene(spark):
     )
     t = "t_langid_model"
     drop_table_and_location(spark, t)
-    info = L.langid_store_update(spark, t, w, b, dim=256)
-    assert info["classes"] == 3
+    L.langid_store_update(spark, t, w, b, dim=256)
+    # weights only (no bias sentinel rows); biases ride the stamp
+    assert spark.table(t).filter(F.col("bucket").isNull()).count() == 0
+    assert sorted(store_stamp(spark, t)["biases"]) == sorted(b)
+    assert len(b) == 3
     direct = sorted(
         map(tuple, L.langid_score(df, w, b, "text", "doc_id",
                                   dim=256).collect())
@@ -153,8 +156,7 @@ def test_train_raises_on_gramless_class_and_zero_weight_export(spark):
     """A class whose every document is gramless raises loudly (silent
     drop would desync MLlib's class count from the label list); an
     all-zero coefficient export is an EMPTY weight relation so the
-    stored model still scores (bias-only), never a placeholder row
-    that poisons the store's bias sentinels."""
+    stored model still scores (bias-only), never a placeholder row."""
     bad = spark.createDataFrame(
         [(1, "xx", "plenty of text here"), (2, "yy", " ")],
         "doc_id long, lang string, text string",

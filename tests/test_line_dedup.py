@@ -134,7 +134,7 @@ def test_fingerprint_store_roundtrip_bucketed(spark):
     tbl = f"fps_{uuid.uuid4().hex[:8]}"
     try:
         B.write_fingerprints(fps, tbl, num_buckets=4)
-        store = B.read_fingerprints(spark, tbl)
+        store = spark.table(tbl)
         assert store.count() == 2
         # the restored store blocks previously-seen content
         b2 = spark.createDataFrame(
@@ -216,7 +216,7 @@ def test_lsh_store_roundtrip_bucketed(spark):
     tbl = f"lsh_{uuid.uuid4().hex[:8]}"
     try:
         B.write_lsh_store(dd.lsh_bucket_store(docs, "text", "doc_id"), tbl, num_buckets=4)
-        store = B.read_lsh_store(spark, tbl)
+        store = spark.table(tbl)
         assert store.count() == 16 * 2
         batch = spark.createDataFrame([(10, _LONG)], "doc_id long, text string")
         cands, _ = dd.near_dup_incremental(batch, store, "text", "doc_id")

@@ -483,7 +483,7 @@ def test_incremental_dedup_bucketed_store_never_reshuffles(spark, tmp_path):
             [(i, f"text {i}") for i in range(200)], "doc_id long, text string"
         )
         B.write_fingerprints(dd.content_fingerprints(b1, "text"), tbl, num_buckets=4)
-        store = B.read_fingerprints(spark, tbl)
+        store = spark.table(tbl)
         b2 = spark.createDataFrame(
             [(i + 900, f"other {i}") for i in range(50)], "doc_id long, text string"
         )
@@ -518,7 +518,7 @@ def test_near_dup_incremental_bucketed_store_never_reshuffles(spark, tmp_path):
             "doc_id long, text string",
         )
         B.write_lsh_store(dd.lsh_bucket_store(b1, "text", "doc_id"), tbl, num_buckets=4)
-        store = B.read_lsh_store(spark, tbl)
+        store = spark.table(tbl)
         b2 = spark.createDataFrame(
             [(900, "document body number 7 with some shared phrasing")],
             "doc_id long, text string",
@@ -560,7 +560,7 @@ def test_span_store_never_reshuffles(spark, tmp_path):
         B.write_span_store(
             dd.span_window_hashes(b1, "text", "doc_id"), tbl, num_buckets=4
         )
-        store = B.read_span_store(spark, tbl)
+        store = spark.table(tbl)
         b2 = spark.createDataFrame(
             [(900, f"{phrase} and then some fresh material")],
             "doc_id long, text string",
@@ -615,7 +615,7 @@ def test_embedding_store_never_reshuffles(spark, tmp_path):
             tbl,
             num_buckets=4,
         )
-        store = B.read_embedding_store(spark, tbl)
+        store = spark.table(tbl)
         b2 = spark.createDataFrame(
             [(900, [3.0, 1.0, 0.5, 2.0])],
             "vec_id long, embedding array<float>",
@@ -750,12 +750,12 @@ def test_compacted_lsh_store_same_candidates_and_no_reshuffle(spark):
 
         def candidates():
             cands, _ = dd.near_dup_incremental(
-                batch, B.read_lsh_store(spark, tbl), "text", "doc_id"
+                batch, spark.table(tbl), "text", "doc_id"
             )
             return cands
 
         before = sorted(tuple(r) for r in candidates().collect())
-        report = B.compact_lsh_store(spark, tbl, num_buckets=4)
+        report = B.compact_store(spark, tbl, ("band", "bucket"), num_buckets=4)
         assert report["files_after"] < report["files_before"]
         assert report["files_after"] <= 4  # one file per bucket
         after_df = candidates()

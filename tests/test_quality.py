@@ -245,9 +245,11 @@ def test_hist_store_incremental_drift_equals_two_frame(spark):
     )
     table = "hist_store_test"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    r1 = Q.hist_store_update(spark, table, a, "v", bins=10, lo=0.0, hi=50.0)
-    r2 = Q.hist_store_update(spark, table, b, "v", bins=10, lo=0.0, hi=50.0)
-    assert r1["n"] == 500 and r2["n"] == 1000
+    Q.hist_store_update(spark, table, a, "v", bins=10, lo=0.0, hi=50.0)
+    Q.hist_store_update(spark, table, b, "v", bins=10, lo=0.0, hi=50.0)
+    # the store is (bin, n) rows only; the binning is its stamp
+    assert spark.table(table).columns == ["bin", "n"]
+    assert spark.table(table).agg(F.sum("n")).first()[0] == 1000
     inc = Q.drift_psi_from_store(spark, table, cur).collect()
     whole = Q.drift_psi(ref, cur, "v", bins=10, lo=0.0, hi=50.0).collect()
     assert [tuple(r) for r in inc] == [tuple(r) for r in whole]
@@ -403,9 +405,9 @@ def test_cat_store_incremental_equals_two_frame(spark):
     b = ref.exceptAll(a)  # the remaining 60 rows, multiplicity kept
     table = "cat_store_test"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    r1 = Q.cat_hist_store_update(spark, table, a, "lang", cats)
-    r2 = Q.cat_hist_store_update(spark, table, b, "lang", cats)
-    assert r1["n"] == 40 and r2["n"] == 100
+    Q.cat_hist_store_update(spark, table, a, "lang", cats)
+    Q.cat_hist_store_update(spark, table, b, "lang", cats)
+    assert spark.table(table).agg(F.sum("n")).first()[0] == 100
     got = Q.drift_psi_categorical_from_store(spark, table, cur).collect()
     want = Q.drift_psi_categorical(ref, cur, "lang", categories=cats).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
@@ -450,9 +452,11 @@ def test_multi_hist_store_equals_two_frame_multi(spark):
     specs = {"v": (0.0, 50.0), "w": (0.0, 7.0)}
     table = "multi_hist_store_test"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    r1 = Q.hist_store_update_multi(spark, table, a, specs, bins=10)
-    r2 = Q.hist_store_update_multi(spark, table, b, specs, bins=10)
-    assert r1["n"] == 500 and r2["n"] == 1000
+    Q.hist_store_update_multi(spark, table, a, specs, bins=10)
+    Q.hist_store_update_multi(spark, table, b, specs, bins=10)
+    n = {r["col"]: r["s"] for r in spark.table(table).groupBy("col")
+         .agg(F.sum("n").alias("s")).collect()}
+    assert n == {"v": 1000, "w": 1000}
     got = Q.drift_psi_multi_from_store(spark, table, cur).collect()
     want = Q.drift_psi_multi(ref, cur, specs, bins=10).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
@@ -481,8 +485,8 @@ def test_store_fold_recovers_from_orphan_staging_dir(spark):
     os.makedirs(orphan, exist_ok=True)
     open(os.path.join(orphan, "junk"), "w").write("crashed fold leftovers")
     df = spark.createDataFrame([(1.0,)] * 10, "v double")
-    r = Q.hist_store_update(spark, table, df, "v", bins=2, lo=0.0, hi=2.0)
-    assert r["n"] == 10
+    Q.hist_store_update(spark, table, df, "v", bins=2, lo=0.0, hi=2.0)
+    assert spark.table(table).agg(F.sum("n")).first()[0] == 10
     assert not os.path.exists(os.path.join(orphan, "junk"))
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 

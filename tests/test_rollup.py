@@ -7,7 +7,11 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from dataframes_spark.io.store import compact_swap_store, drop_table_and_location
+from dataframes_spark.io.store import (
+    compact_swap_store,
+    drop_table_and_location,
+    store_stamp,
+)
 from dataframes_spark.operators import rollup as R
 
 
@@ -179,8 +183,10 @@ def test_compaction_preserves_served_report(spark):
             by=["g"],
         )
     before = sorted(map(tuple, R.rollup_serve(spark, t).collect()))
+    stamp = store_stamp(spark, t)
     out = compact_swap_store(spark, t)
     assert out["files_after"] <= out["files_before"]
+    assert store_stamp(spark, t) == stamp
     after = sorted(map(tuple, R.rollup_serve(spark, t).collect()))
     assert before == after
 
@@ -294,8 +300,8 @@ def test_store_refresh_replaces_range_only(spark):
 
 
 def test_distinct_serve_store_handles_empty_store(spark):
-    """Folding an EMPTY first batch leaves a stampless store; serving
-    must return an empty frame, not crash on the missing stamp."""
+    """Folding an EMPTY first batch leaves an empty but stamped store;
+    serving returns an empty frame."""
     t = "t_rollup_distinct_empty"
     drop_table_and_location(spark, t)
     empty = spark.createDataFrame([], "k long, ts timestamp, u long")
@@ -344,14 +350,16 @@ def test_multi_rollup_one_scan_matches_per_column(spark):
 
 
 def test_serve_empty_store_keeps_group_columns(spark):
-    """An empty first fold used to lose the group columns at serve
-    time (by recovered from a .first() stamp row that does not exist);
-    group columns now recover from the SCHEMA, so the served frame is
+    """An empty first fold still stamps the store (a catalog property,
+    not a row), so serve recovers the group columns: the served frame is
     empty but correctly shaped — downstream unionByName keeps working."""
     t = "t_rollup_empty_by"
     drop_table_and_location(spark, t)
     empty = spark.createDataFrame([], "g string, ts timestamp, v double")
     R.rollup_store_update(spark, t, empty, "ts", "v", "1 hour", by=["g"])
+    assert store_stamp(spark, t) == {
+        "col": "v", "width_us": 3_600_000_000, "by": ["g"],
+    }
     served = R.rollup_serve(spark, t)
     assert served.columns[:2] == ["bucket_ts", "g"]
     assert served.count() == 0

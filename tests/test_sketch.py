@@ -7,7 +7,6 @@ from dataframes_spark.operators.sketch import (
     cms_build,
     cms_estimate,
     cms_merge,
-    cms_store_read,
     cms_store_update,
     heavy_hitters,
 )
@@ -103,10 +102,11 @@ def test_incremental_store_equals_whole(spark, stream):
     b = stream.filter(F.length("v") == 3)
     table = "cms_store_test"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    r1 = cms_store_update(spark, table, cms_build(a, "v", depth=3, width=32))
-    r2 = cms_store_update(spark, table, cms_build(b, "v", depth=3, width=32))
-    assert r2["total"] == stream.count() and r2["total"] > r1["total"]
-    store = cms_store_read(spark, table)
+    assert cms_store_update(
+        spark, table, cms_build(a, "v", depth=3, width=32)
+    ) is None
+    cms_store_update(spark, table, cms_build(b, "v", depth=3, width=32))
+    store = spark.table(table)
     whole = cms_build(stream, "v", depth=3, width=32)
     assert store.exceptAll(whole).count() == 0
     assert whole.exceptAll(store).count() == 0
@@ -140,7 +140,6 @@ from dataframes_spark.operators.sketch import (  # noqa: E402
     hll_build,
     hll_estimate,
     hll_merge,
-    hll_store_read,
     hll_store_update,
 )
 
@@ -224,10 +223,9 @@ def test_hll_store_incremental_equals_whole(spark, ids):
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     a = ids.filter(F.col("v") < "id3")
     b = ids.filter(F.col("v") >= "id3")
-    r1 = hll_store_update(spark, table, hll_build(a, "v", ("g",), p=10), key_cols=("g",))
-    r2 = hll_store_update(spark, table, hll_build(b, "v", ("g",), p=10), key_cols=("g",))
-    assert r2["keys"] == 2 and r2["registers"] >= r1["registers"]
-    store = hll_store_read(spark, table)
+    hll_store_update(spark, table, hll_build(a, "v", ("g",), p=10), key_cols=("g",))
+    hll_store_update(spark, table, hll_build(b, "v", ("g",), p=10), key_cols=("g",))
+    store = spark.table(table)
     whole = hll_build(ids, "v", ("g",), p=10)
     assert store.exceptAll(whole).count() == 0
     assert whole.exceptAll(store).count() == 0
@@ -303,7 +301,6 @@ from dataframes_spark.operators.sketch import (  # noqa: E402
     bottomk_build,
     bottomk_merge,
     bottomk_quantiles,
-    bottomk_store_read,
     bottomk_store_update,
 )
 
@@ -371,16 +368,12 @@ def test_bottomk_store_incremental_and_quantiles(spark, corpus):
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     a = corpus.filter(F.col("id") < 100)
     b = corpus.filter(F.col("id") >= 100)
-    r1 = bottomk_store_update(
-        spark, table, bottomk_build(a, "id", 20, ("g",), ("v",), "s"),
-        id_col="id", k=20, key_cols=("g",),
-    )
-    r2 = bottomk_store_update(
-        spark, table, bottomk_build(b, "id", 20, ("g",), ("v",), "s"),
-        id_col="id", k=20, key_cols=("g",),
-    )
-    assert r1["keys"] == r2["keys"] == 3 and r2["rows"] == 60
-    store = bottomk_store_read(spark, table)
+    for part in (a, b):
+        bottomk_store_update(
+            spark, table, bottomk_build(part, "id", 20, ("g",), ("v",), "s"),
+            id_col="id", k=20, key_cols=("g",),
+        )
+    store = spark.table(table)
     whole = bottomk_build(corpus, "id", 20, ("g",), ("v",), "s")
     assert _rows(store) == _rows(whole)
     # sample quantiles approximate the stream's (v uniform on 0..2990)
@@ -411,7 +404,6 @@ def test_weighted_merge_equals_whole_and_store(spark):
     from dataframes_spark.operators.sample import (
         weighted_sample_merge,
         weighted_sample_topk,
-        weighted_store_read,
         weighted_store_update,
     )
 
@@ -434,10 +426,9 @@ def test_weighted_merge_equals_whole_and_store(spark):
     # the persisted store follows the same law
     table = "ws_store_test"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    r1 = weighted_store_update(spark, table, ka, key_col="id", k=5, stratum_col="s")
-    r2 = weighted_store_update(spark, table, kb, key_col="id", k=5, stratum_col="s")
-    assert r1["strata"] == r2["strata"] == 2 and r2["rows"] == 10
-    store = weighted_store_read(spark, table)
+    weighted_store_update(spark, table, ka, key_col="id", k=5, stratum_col="s")
+    weighted_store_update(spark, table, kb, key_col="id", k=5, stratum_col="s")
+    store = spark.table(table)
     assert sorted(map(tuple, store.collect())) == sorted(
         map(tuple, whole.collect())
     )

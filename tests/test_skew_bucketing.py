@@ -128,8 +128,8 @@ def test_bucketed_join_has_no_exchange(spark):
     dbuck.write_bucketed(a, "bt_a", "k", num_buckets=8, sort_by="k")
     dbuck.write_bucketed(b, "bt_b", "k", num_buckets=8, sort_by="k")
     try:
-        joined = dbuck.read_bucketed(spark, "bt_a").join(
-            dbuck.read_bucketed(spark, "bt_b"), "k"
+        joined = spark.table("bt_a").join(
+            spark.table("bt_b"), "k"
         )
         # force the shuffle-join path so the assert is about bucketing,
         # not about broadcast hiding the exchange
@@ -156,7 +156,7 @@ def test_bucketed_aggregation_skips_shuffle(spark):
     )
     dbuck.write_bucketed(df, "bt_g", "k", num_buckets=8)
     try:
-        agg = dbuck.read_bucketed(spark, "bt_g").groupBy("k").agg(F.sum("v").alias("s"))
+        agg = spark.table("bt_g").groupBy("k").agg(F.sum("v").alias("s"))
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )

@@ -384,13 +384,10 @@ def test_sketch_stores_fold_stream_equals_batch(spark, tmp_path):
     one-shot batch sketch over all rows, whatever the file/batch split."""
     from dataframes_spark.operators.sketch import (
         bottomk_build,
-        bottomk_store_read,
         bottomk_store_update,
         cms_build,
-        cms_store_read,
         cms_store_update,
         hll_build,
-        hll_store_read,
         hll_store_update,
     )
 
@@ -423,13 +420,13 @@ def test_sketch_stores_fold_stream_equals_batch(spark, tmp_path):
     def rows_of(df):
         return sorted(tuple(r) for r in df.collect())
 
-    assert rows_of(cms_store_read(spark, "cms_stream_t")) == rows_of(
+    assert rows_of(spark.table("cms_stream_t")) == rows_of(
         cms_build(whole, "v", depth=2, width=32)
     )
-    assert rows_of(hll_store_read(spark, "hll_stream_t")) == rows_of(
+    assert rows_of(spark.table("hll_stream_t")) == rows_of(
         hll_build(whole, "v", p=8)
     )
-    assert rows_of(bottomk_store_read(spark, "bk_stream_t")) == rows_of(
+    assert rows_of(spark.table("bk_stream_t")) == rows_of(
         bottomk_build(whole, "id", 9, salt="st")
     )
     for t in ("cms_stream_t", "hll_stream_t", "bk_stream_t"):
@@ -452,7 +449,6 @@ def test_weighted_and_moment_stores_fold_stream_equals_batch(spark, tmp_path):
     )
     from dataframes_spark.operators.sample import (
         weighted_sample_topk,
-        weighted_store_read,
         weighted_store_update,
     )
 
@@ -493,7 +489,7 @@ def test_weighted_and_moment_stores_fold_stream_equals_batch(spark, tmp_path):
 
     got = sorted(
         tuple(r)
-        for r in weighted_store_read(spark, "ws_stream_t")
+        for r in spark.table("ws_stream_t")
         .select("id", "s", "w")
         .collect()
     )
@@ -749,6 +745,7 @@ def test_dsir_select_each_batch_scores_against_folded_stores(spark):
     epoch, to the batch path run with the same store state."""
     import uuid
 
+    from dataframes_spark.io.store import store_stamp
     from dataframes_spark.operators import dsir as D
 
     raw_t = f"dsir_raw_{uuid.uuid4().hex[:8]}"
@@ -760,7 +757,7 @@ def test_dsir_select_each_batch_scores_against_folded_stores(spark):
         "doc_id long, text string",
     )
     D.dsir_store_update(
-        spark, tgt_t, D.bucket_counts(target, "text", "doc_id", 32)
+        spark, tgt_t, D.bucket_counts(target, "text", "doc_id", 32), 32
     )
     b1 = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "zeta eta theta iota kappa")],
@@ -782,11 +779,11 @@ def test_dsir_select_each_batch_scores_against_folded_stores(spark):
     assert outs[0] == [1] and outs[1] == [3]
     assert logged == [(0, 2, 1), (1, 2, 1)]
     # raw store after the run == one-shot counts over both batches (law);
-    # the store additionally carries the bucket-domain stamp column `b`
+    # the bucket domain is the store's stamp, not a column
     whole = D.bucket_counts(b1.unionByName(b2), "text", "doc_id", 32)
-    store = spark.table(raw_t)
-    assert set(r["b"] for r in store.select("b").distinct().collect()) == {32}
-    counts = store.select("bucket", "c")
+    assert store_stamp(spark, raw_t) == {"buckets": 32}
+    counts = spark.table(raw_t)
+    assert counts.columns == ["bucket", "c"]
     assert counts.exceptAll(whole).count() == 0
     assert whole.exceptAll(counts).count() == 0
     # epoch-2 selection replays on the batch path with the same stores
@@ -973,7 +970,7 @@ def test_retention_pair_store_compacts_without_changing_the_matrix(spark):
     import datetime as _dt
     import uuid
 
-    from dataframes_spark.io.bucketed import compact_pair_store
+    from dataframes_spark.io.bucketed import compact_store
     from dataframes_spark.operators import funnel as fn
 
     pt = f"retention_pairs_{uuid.uuid4().hex[:8]}"
@@ -992,7 +989,7 @@ def test_retention_pair_store_compacts_without_changing_the_matrix(spark):
         (str(r["cohort"]), r["offset"]): r["users"]
         for r in fn.retention_from_pairs(spark.table(pt), "day").collect()
     }
-    rep = compact_pair_store(spark, pt, num_buckets=4)
+    rep = compact_store(spark, pt, "u", num_buckets=4)
     assert rep["files_after"] <= 4 <= rep["files_before"]
     assert rep["rows"] == 8
     after = {

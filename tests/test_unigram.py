@@ -143,14 +143,15 @@ def test_encode_matches_training_segmentation_and_unk(spark):
 
 
 def test_store_roundtrip(spark):
-    from dataframes_spark.io.store import drop_table_and_location
+    from dataframes_spark.io.store import drop_table_and_location, store_stamp
 
     df = _df(spark)
     pieces = U.unigram_train(df, "text", vocab_size=10, max_piece_len=3)
     t = "t_unigram_model"
     drop_table_and_location(spark, t)
-    info = U.unigram_store_update(spark, t, pieces, max_piece_len=3)
-    assert info["pieces"] == pieces.count()
+    U.unigram_store_update(spark, t, pieces, max_piece_len=3)
+    assert spark.table(t).count() == pieces.count()
+    assert store_stamp(spark, t) == {"max_piece_len": 3}
     direct = sorted(
         map(tuple, U.unigram_encode(df, "text", "id", pieces, 3).collect())
     )
