@@ -19,6 +19,9 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(
     len(os.sched_getaffinity(0))
 )
 
+#: directory of the Python worker module (``_worker/pyspark_graft_worker.py``)
+_WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
+
 
 def get_spark(app_name: str = "dataframes_spark", cpus: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-ready defaults.
@@ -72,6 +75,19 @@ def get_spark(app_name: str = "dataframes_spark", cpus: str | None = None) -> Sp
             "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
         )
         .config("spark.ui.enabled", "false")
+        # every pandas UDF, mapInPandas and Python-RDD task starts with
+        # importlib.invalidate_caches() (pyspark/worker_util.py:144); on
+        # CPython 3.11 zipimporter.invalidate_caches re-reads the archive's
+        # whole directory at once (zipimport.py:329-336), so each task
+        # re-read pyspark.zip (once per imported subpackage), the py4j zip
+        # and the spark-core jar (5359 entries, twice): 120-210 ms per task
+        # (median 167 ms, timed inside reused workers on 4 vCPUs) doing no
+        # work; with the worker module the call takes ~0.1 ms. The module
+        # keeps those cached directories and runs the stock pyspark.worker;
+        # it must be named pyspark* (pyspark/daemon.py:34 ignores any other
+        # name) and must be importable, or every Python UDF fails.
+        .config("spark.python.worker.module", "pyspark_graft_worker")
+        .config("spark.executorEnv.PYTHONPATH", _WORKER_DIR)
         # DataFrame-debugging call-site capture (a Spark 4 error-message
         # enrichment aid) wraps EVERY DataFrame/Column API call with a
         # Python stack walk plus set/clear py4j roundtrips to

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataframes_spark.functions import bpe
+from dataframes_spark.io.store import drop_table_and_location
 
 
 def _ref_bpe(texts, k):
@@ -137,7 +138,7 @@ def test_word_type_store_and_streaming_gate(spark):
     from dataframes_spark.streaming import events as dstream
 
     t = f"bpe_types_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
     df = spark.createDataFrame([(i, t_) for i, t_ in enumerate(TEXTS)],
                                "doc_id long, text string")
     served = []
@@ -153,7 +154,7 @@ def test_word_type_store_and_streaming_gate(spark):
     got, _ = bpe.bpe_learn_from_store(spark, t, 4)
     assert got == want
     assert served[-1] == [(m["step"], m["merged"]) for m in want]
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
 
 def test_fertility_matches_reference(spark):

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataframes_spark.functions import classifier as C
+from dataframes_spark.io.store import drop_table_and_location
 
 
 def _docs(spark, rows):
@@ -145,7 +146,7 @@ def test_store_roundtrip_and_stamp(spark):
         classifier_store_update,
         score_quality_from_store,
     )
-    from dataframes_spark.io.store import drop_table_and_location, store_stamp
+    from dataframes_spark.io.store import store_stamp
 
     t = "t_qc_store"
     drop_table_and_location(spark, t)
@@ -195,7 +196,7 @@ def test_store_roundtrip_and_stamp(spark):
         ).collect()
     }
     assert got[1] == pytest.approx(1 / (1 + math.exp(-0.7)), rel=1e-12)
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
 
 def test_classify_each_batch_stream_equals_batch(spark, tmp_path):
@@ -210,7 +211,7 @@ def test_classify_each_batch_stream_equals_batch(spark, tmp_path):
     from dataframes_spark.streaming.events import classify_each_batch
 
     t = f"t_qc_stream_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
     weights = spark.createDataFrame(
         [(i, (i * 37 % 21 - 10) / 10.0) for i in range(16)],
         "bucket int, weight double",
@@ -247,7 +248,7 @@ def test_classify_each_batch_stream_equals_batch(spark, tmp_path):
         ).filter(F.col("quality_prob") >= 0.5).collect()
     )
     assert sorted(kept) == want and 0 < len(want) < 60
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
 
 def test_train_raises_on_null_and_duplicate_ids(spark):

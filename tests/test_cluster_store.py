@@ -7,6 +7,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from dataframes_spark.io.store import drop_table_and_location
 from dataframes_spark.operators import graph as G
 
 
@@ -30,9 +31,9 @@ def _one_shot(spark, pairs):
 @pytest.fixture
 def table(spark):
     t = f"cluster_store_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
     yield t
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
 
 def test_fold_equals_one_shot_basic(spark, table):

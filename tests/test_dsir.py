@@ -6,6 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from dataframes_spark.io.store import drop_table_and_location
 from dataframes_spark.operators import dsir
 
 
@@ -141,7 +142,7 @@ def test_store_fold_equals_one_shot_fit(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     raw_t, tgt_t = "dsir_raw_store_test", "dsir_tgt_store_test"
     for t in (raw_t, tgt_t):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
     a = docs.filter("doc_id % 2 = 0")
     b = docs.filter("doc_id % 2 = 1")
     for half in (a, b):
@@ -173,7 +174,7 @@ def test_store_fold_equals_one_shot_fit(spark, sf_dir):
     with _pytest.raises(ValueError, match="buckets=32"):
         dsir.dsir_fit_from_stores(spark, tgt_t, raw_t, buckets=64)
     for t in (raw_t, tgt_t):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
 
 
 def test_model_report_kl_properties(spark, sf_dir):

@@ -5,6 +5,7 @@ bound, merge law, persisted store."""
 import pytest
 from pyspark.sql import functions as F
 
+from dataframes_spark.io.store import drop_table_and_location
 from dataframes_spark.operators import kll
 
 CFG = dict(k=64, shards=4, passes=10, merge_passes=10)
@@ -108,7 +109,7 @@ def test_store_folds_batches_with_constant_state(spark):
     from dataframes_spark.io.store import store_stamp
 
     t = f"kll_store_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
     try:
         kll.kll_store_update(spark, t, _perm(spark, 4000), "v", "k", **CFG)
         assert store_stamp(spark, t) == {"k": CFG["k"]}
@@ -142,7 +143,7 @@ def test_store_folds_batches_with_constant_state(spark):
                 k=32, shards=4, passes=8,
             )
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
 
 
 def test_validation(spark):

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataframes_spark.functions import langid as L
+from dataframes_spark.io.store import drop_table_and_location
 
 
 def test_char_ngrams_edges(spark):
@@ -72,7 +73,7 @@ def test_train_and_score_multiclass(spark):
 
 
 def test_store_roundtrip_and_hygiene(spark):
-    from dataframes_spark.io.store import drop_table_and_location, store_stamp
+    from dataframes_spark.io.store import store_stamp
 
     df = _corpus(spark, n=20)
     w, b = L.train_langid(
@@ -99,7 +100,7 @@ def test_store_roundtrip_and_hygiene(spark):
         )
     )
     assert direct == stored
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
     dup = df.unionByName(df.limit(1))
     with pytest.raises(ValueError, match="duplicate ids"):
@@ -164,8 +165,6 @@ def test_train_raises_on_gramless_class_and_zero_weight_export(spark):
     with pytest.raises(ValueError, match=r"classes \['yy'\]"):
         L.train_langid(bad, "text", "lang", "doc_id", dim=64)
 
-    from dataframes_spark.io.store import drop_table_and_location
-
     tiny = _corpus(spark, n=4)
     # a huge reg_param drives every coefficient to (near-)zero; even if
     # the export is empty, store + score-from-store must keep working
@@ -180,4 +179,4 @@ def test_train_raises_on_gramless_class_and_zero_weight_export(spark):
     ).collect()
     assert len(scored) == tiny.count()
     assert all(r.lang_pred in b for r in scored)
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)

@@ -8,6 +8,7 @@ the separator is a literal (not a regex)."""
 import pytest
 from pyspark.sql import functions as F
 
+from dataframes_spark.io.store import drop_table_and_location
 from dataframes_spark.operators import dedup
 
 
@@ -143,7 +144,7 @@ def test_fingerprint_store_roundtrip_bucketed(spark):
         fresh, _ = dd.exact_dedup_incremental(b2, store, "text", "doc_id")
         assert [r.text for r in fresh.collect()] == ["gamma"]
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        drop_table_and_location(spark, tbl)
 
 
 # ---------------------------------------------------------------------------
@@ -222,7 +223,7 @@ def test_lsh_store_roundtrip_bucketed(spark):
         cands, _ = dd.near_dup_incremental(batch, store, "text", "doc_id")
         assert {(r.id_new, r.id_seen) for r in cands.collect()} == {(10, 1)}
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        drop_table_and_location(spark, tbl)
 
 
 def test_table_facade_pipeline_hooks(spark):

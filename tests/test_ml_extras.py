@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataframes_spark import ml as dml
+from dataframes_spark.io.store import drop_table_and_location
 from dataframes_spark.operators import aggregate as dagg
 from dataframes_spark.operators import dedup as ddedup
 from dataframes_spark.operators import window as dwindow
@@ -247,7 +248,7 @@ def test_pca_moment_store_incremental_equals_whole(spark):
     a = df.filter(F.col("id") < 120)
     b = df.filter(F.col("id") >= 120)
     table = "pca_moment_store_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     dml.moments_store_update(spark, table, a, "embedding", 6)
     dml.moments_store_update(spark, table, b, "embedding", 6)
     assert spark.table(table).agg(F.max("n")).first()[0] == 300
@@ -258,7 +259,7 @@ def test_pca_moment_store_incremental_equals_whole(spark):
     assert np.allclose(
         inc["explained_variance"], whole["explained_variance"], atol=1e-12
     )
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     with pytest.raises(Exception, match="empty store|TABLE_OR_VIEW"):
         dml.pca_fit_from_store(spark, "no_such_moment_store", k=1, dim=6)
 

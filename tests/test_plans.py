@@ -9,6 +9,7 @@ import re
 import pytest
 
 import __spark_entry__ as entry
+from dataframes_spark.io.store import drop_table_and_location
 
 
 @pytest.fixture(scope="module")
@@ -496,7 +497,7 @@ def test_incremental_dedup_bucketed_store_never_reshuffles(spark, tmp_path):
         assert fresh.count() == 50
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        drop_table_and_location(spark, tbl)
 
 
 def test_near_dup_incremental_bucketed_store_never_reshuffles(spark, tmp_path):
@@ -534,7 +535,7 @@ def test_near_dup_incremental_bucketed_store_never_reshuffles(spark, tmp_path):
         assert cands.count() >= 1  # doc 7 collides with the new arrival
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        drop_table_and_location(spark, tbl)
 
 
 def test_span_store_never_reshuffles(spark, tmp_path):
@@ -587,7 +588,7 @@ def test_span_store_never_reshuffles(spark, tmp_path):
         assert updated.count() > store.count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        drop_table_and_location(spark, tbl)
 
 
 def test_embedding_store_never_reshuffles(spark, tmp_path):
@@ -636,7 +637,7 @@ def test_embedding_store_never_reshuffles(spark, tmp_path):
         assert dups.count() >= 1  # vec 900 == vec 3 direction exactly
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        drop_table_and_location(spark, tbl)
 
 
 GLOBAL_ORDER_QUERIES = (
@@ -769,8 +770,8 @@ def test_compacted_lsh_store_same_candidates_and_no_reshuffle(spark):
         assert "Exchange" not in p[idx:].split("FileScan")[0]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}__compact")
+        drop_table_and_location(spark, tbl)
+        drop_table_and_location(spark, f"{tbl}__compact")
 
 
 # Every query with a DOCUMENTED reason to funnel data through one reducer

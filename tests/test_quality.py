@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataframes_spark import quality as Q
+from dataframes_spark.io.store import drop_table_and_location
 
 
 @pytest.fixture()
@@ -244,7 +245,7 @@ def test_hist_store_incremental_drift_equals_two_frame(spark):
         [(float(i % 50) + 10.0,) for i in range(500)], "v double"
     )
     table = "hist_store_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     Q.hist_store_update(spark, table, a, "v", bins=10, lo=0.0, hi=50.0)
     Q.hist_store_update(spark, table, b, "v", bins=10, lo=0.0, hi=50.0)
     # the store is (bin, n) rows only; the binning is its stamp
@@ -259,7 +260,7 @@ def test_hist_store_incremental_drift_equals_two_frame(spark):
     # binning is stamped: a mismatched fold refuses
     with pytest.raises(ValueError, match="refusing to fold"):
         Q.hist_store_update(spark, table, a, "v", bins=20, lo=0.0, hi=50.0)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     with pytest.raises(Exception, match="TABLE_OR_VIEW|empty"):
         Q.drift_psi_from_store(spark, "no_such_hist_store", ref)
 
@@ -404,7 +405,7 @@ def test_cat_store_incremental_equals_two_frame(spark):
     a = ref.limit(40)
     b = ref.exceptAll(a)  # the remaining 60 rows, multiplicity kept
     table = "cat_store_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     Q.cat_hist_store_update(spark, table, a, "lang", cats)
     Q.cat_hist_store_update(spark, table, b, "lang", cats)
     assert spark.table(table).agg(F.sum("n")).first()[0] == 100
@@ -416,7 +417,7 @@ def test_cat_store_incremental_equals_two_frame(spark):
 
     with _pt.raises(ValueError, match="refusing to fold"):
         Q.cat_hist_store_update(spark, table, b, "lang", ["en", "de"])
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
 
 
 def test_cat_store_keeps_zero_count_categories(spark):
@@ -425,7 +426,7 @@ def test_cat_store_keeps_zero_count_categories(spark):
     vanished category would silently re-bucket future batches into
     __other__."""
     table = "cat_store_zero_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     batch = spark.createDataFrame([("en",)] * 10, "lang string")
     Q.cat_hist_store_update(spark, table, batch, "lang", ["en", "zh"])
     got = {r.category: r.n for r in spark.table(table).collect()}
@@ -436,7 +437,7 @@ def test_cat_store_keeps_zero_count_categories(spark):
     rows = {r.category: r.n_cur for r in
             Q.drift_psi_categorical_from_store(spark, table, cur).collect()}
     assert rows["zh"] == 10 and rows["__other__"] == 0
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
 
 
 def test_multi_hist_store_equals_two_frame_multi(spark):
@@ -451,7 +452,7 @@ def test_multi_hist_store_equals_two_frame_multi(spark):
     )
     specs = {"v": (0.0, 50.0), "w": (0.0, 7.0)}
     table = "multi_hist_store_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     Q.hist_store_update_multi(spark, table, a, specs, bins=10)
     Q.hist_store_update_multi(spark, table, b, specs, bins=10)
     n = {r["col"]: r["s"] for r in spark.table(table).groupBy("col")
@@ -467,7 +468,7 @@ def test_multi_hist_store_equals_two_frame_multi(spark):
         Q.hist_store_update_multi(spark, table, b, {"v": (0.0, 60.0), "w": (0.0, 7.0)}, bins=10)
     with _pt.raises(ValueError, match="refusing to fold"):
         Q.hist_store_update_multi(spark, table, b, {"v": (0.0, 50.0)}, bins=10)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
 
 
 def test_store_fold_recovers_from_orphan_staging_dir(spark):
@@ -478,8 +479,8 @@ def test_store_fold_recovers_from_orphan_staging_dir(spark):
     import os
 
     table = "orphan_recovery_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}__staging")
+    drop_table_and_location(spark, table)
+    drop_table_and_location(spark, f"{table}__staging")
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     orphan = os.path.join(wh, f"{table}__staging")
     os.makedirs(orphan, exist_ok=True)
@@ -488,7 +489,7 @@ def test_store_fold_recovers_from_orphan_staging_dir(spark):
     Q.hist_store_update(spark, table, df, "v", bins=2, lo=0.0, hi=2.0)
     assert spark.table(table).agg(F.sum("n")).first()[0] == 10
     assert not os.path.exists(os.path.join(orphan, "junk"))
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
 
 
 # property: categorical PSI store law for any batch split
@@ -522,8 +523,8 @@ def test_cat_store_fold_law_any_split(spark, langs, cut):
     Q.cat_hist_store_update(spark, t2, df, "lang", cats)
     got = sorted(map(tuple, spark.table(t1).collect()))
     want = sorted(map(tuple, spark.table(t2).collect()))
-    spark.sql(f"DROP TABLE IF EXISTS {t1}")
-    spark.sql(f"DROP TABLE IF EXISTS {t2}")
+    drop_table_and_location(spark, t1)
+    drop_table_and_location(spark, t2)
     assert got == want
 
 

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from dataframes_spark.io.store import drop_table_and_location
 from dataframes_spark.operators.sketch import (
     cms_build,
     cms_estimate,
@@ -101,7 +102,7 @@ def test_incremental_store_equals_whole(spark, stream):
     a = stream.filter(F.length("v") == 2)
     b = stream.filter(F.length("v") == 3)
     table = "cms_store_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     assert cms_store_update(
         spark, table, cms_build(a, "v", depth=3, width=32)
     ) is None
@@ -119,7 +120,7 @@ def test_incremental_store_equals_whole(spark, stream):
         ).collect()
     }
     assert all(est[k] >= true[k] for k in true)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
 
 
 def test_validation(spark, stream):
@@ -220,7 +221,7 @@ def test_hll_estimate_deterministic_under_repartition(spark, ids):
 
 def test_hll_store_incremental_equals_whole(spark, ids):
     table = "hll_store_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     a = ids.filter(F.col("v") < "id3")
     b = ids.filter(F.col("v") >= "id3")
     hll_store_update(spark, table, hll_build(a, "v", ("g",), p=10), key_cols=("g",))
@@ -233,7 +234,7 @@ def test_hll_store_incremental_equals_whole(spark, ids):
     se = {r.g: r.est_ndv for r in hll_estimate(store, ("g",), p=10).collect()}
     we = {r.g: r.est_ndv for r in hll_estimate(whole, ("g",), p=10).collect()}
     assert se == we
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
 
 
 def test_hll_plan_shape(spark, ids):
@@ -365,7 +366,7 @@ def test_bottomk_grouped_plan_has_windowgrouplimit(spark, corpus):
 
 def test_bottomk_store_incremental_and_quantiles(spark, corpus):
     table = "bk_store_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     a = corpus.filter(F.col("id") < 100)
     b = corpus.filter(F.col("id") >= 100)
     for part in (a, b):
@@ -383,7 +384,7 @@ def test_bottomk_store_incremental_and_quantiles(spark, corpus):
     }
     for g in ("g0", "g1", "g2"):
         assert 500.0 < q[g] < 2500.0  # crude but partitioning-independent
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
 
 
 def test_bottomk_validation(spark, corpus):
@@ -425,14 +426,14 @@ def test_weighted_merge_equals_whole_and_store(spark):
     )
     # the persisted store follows the same law
     table = "ws_store_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     weighted_store_update(spark, table, ka, key_col="id", k=5, stratum_col="s")
     weighted_store_update(spark, table, kb, key_col="id", k=5, stratum_col="s")
     store = spark.table(table)
     assert sorted(map(tuple, store.collect())) == sorted(
         map(tuple, whole.collect())
     )
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     with pytest.raises(ValueError, match="at least one"):
         weighted_sample_merge(key_col="id", k=5)
 

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataframes_spark.io import bucketed as dbuck
+from dataframes_spark.io.store import drop_table_and_location
 from dataframes_spark.operators import aggregate as dagg
 from dataframes_spark.operators import skew as dskew
 
@@ -146,8 +147,8 @@ def test_bucketed_join_has_no_exchange(spark):
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", with_conf)
     finally:
-        spark.sql("DROP TABLE IF EXISTS bt_a")
-        spark.sql("DROP TABLE IF EXISTS bt_b")
+        drop_table_and_location(spark, "bt_a")
+        drop_table_and_location(spark, "bt_b")
 
 
 def test_bucketed_aggregation_skips_shuffle(spark):
@@ -164,7 +165,7 @@ def test_bucketed_aggregation_skips_shuffle(spark):
         assert "Exchange" not in plan, plan
         assert agg.count() == 100
     finally:
-        spark.sql("DROP TABLE IF EXISTS bt_g")
+        drop_table_and_location(spark, "bt_g")
 
 
 def test_salted_std_constant_column_no_nan(spark):

@@ -48,7 +48,7 @@ def test_fold_stamp_refusal_and_replace(spark):
     fold_store(spark, t, batch)
     with pytest.raises(ValueError, match="carries no stamp"):
         store_stamp(spark, t)
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
 
 @pytest.mark.parametrize("compact", ["swap", "bucketed"])
@@ -87,4 +87,7 @@ def test_compaction_keeps_stamp_and_bucket_spec_past_orphans(spark, compact):
         bucket_by="k", num_buckets=4,
     )
     assert spark.table(t).count() == 41
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    # a bucketed compaction stages through __staging, so the planted
+    # __compact orphan is still there
+    for name in (t, f"{t}__compact"):
+        drop_table_and_location(spark, name)

@@ -9,6 +9,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from dataframes_spark.io.store import drop_table_and_location
 from dataframes_spark.streaming import events as dstream
 
 
@@ -399,7 +400,7 @@ def test_sketch_stores_fold_stream_equals_batch(spark, tmp_path):
         ).write.mode("append").parquet(out)
     whole = spark.read.parquet(out)
     for t in ("cms_stream_t", "hll_stream_t", "bk_stream_t"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
 
     def fold(batch_df, epoch_id):
         cms_store_update(spark, "cms_stream_t", cms_build(batch_df, "v", depth=2, width=32))
@@ -430,7 +431,7 @@ def test_sketch_stores_fold_stream_equals_batch(spark, tmp_path):
         bottomk_build(whole, "id", 9, salt="st")
     )
     for t in ("cms_stream_t", "hll_stream_t", "bk_stream_t"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
 
 
 def test_weighted_and_moment_stores_fold_stream_equals_batch(spark, tmp_path):
@@ -466,7 +467,7 @@ def test_weighted_and_moment_stores_fold_stream_equals_batch(spark, tmp_path):
         ).parquet(out)
     whole = spark.read.parquet(out)
     for t in ("ws_stream_t", "mom_stream_t"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
 
     def fold(batch_df, epoch_id):
         weighted_store_update(
@@ -507,7 +508,7 @@ def test_weighted_and_moment_stores_fold_stream_equals_batch(spark, tmp_path):
     assert np.allclose(inc["mean"], one_shot["mean"], atol=1e-12)
     assert np.allclose(inc["components"], one_shot["components"], atol=1e-9)
     for t in ("ws_stream_t", "mom_stream_t"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
 
 
 def test_drift_gate_each_batch_stream_equals_batch_and_gates(spark, tmp_path):
@@ -520,7 +521,7 @@ def test_drift_gate_each_batch_stream_equals_batch_and_gates(spark, tmp_path):
     from dataframes_spark import quality as Q
 
     table = f"drift_stream_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     # two stationary files + one drifted file (values shifted up)
     d = str(tmp_path / "drift_src")
     b1 = spark.createDataFrame([(float(i % 10),) for i in range(200)], "v double")
@@ -545,7 +546,7 @@ def test_drift_gate_each_batch_stream_equals_batch_and_gates(spark, tmp_path):
     assert sum(written) == 400  # both stationary batches accepted
     # store == batch-side folds of the same two batches
     t2 = f"{table}_batchside"
-    spark.sql(f"DROP TABLE IF EXISTS {t2}")
+    drop_table_and_location(spark, t2)
     Q.hist_store_update(spark, t2, b1, "v", bins=5, lo=0.0, hi=10.0)
     Q.hist_store_update(spark, t2, b2, "v", bins=5, lo=0.0, hi=10.0)
     got = sorted(map(tuple, spark.table(table).collect()))
@@ -579,15 +580,15 @@ def test_drift_gate_each_batch_stream_equals_batch_and_gates(spark, tmp_path):
     q3 = src3.writeStream.foreachBatch(cb3).trigger(availableNow=True).start()
     q3.awaitTermination(120)
     assert sunk == [] and spark.table(table).agg(F.sum("n")).first()[0] == n_before
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {t2}")
+    drop_table_and_location(spark, table)
+    drop_table_and_location(spark, t2)
 
 
 def test_drift_gate_each_batch_categorical_and_validation(spark, tmp_path):
     import uuid
 
     table = f"drift_cat_stream_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     d = str(tmp_path / "cat_src")
     b1 = spark.createDataFrame([("en",)] * 80 + [("de",)] * 20, "lang string")
     b1.coalesce(1).write.parquet(d)
@@ -598,7 +599,7 @@ def test_drift_gate_each_batch_categorical_and_validation(spark, tmp_path):
     q.awaitTermination(120)
     got = {r.category: r.n for r in spark.table(table).collect()}
     assert got == {"en": 80, "de": 20, "__other__": 0}
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
 
     with pytest.raises(ValueError, match="lo/hi"):
         dstream.drift_gate_each_batch("t", "v")
@@ -618,7 +619,7 @@ def test_span_dedup_each_batch_stream_equals_batch_twin(spark, tmp_path):
     from dataframes_spark.operators import dedup as dd
 
     table = f"span_stream_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     shared = "alpha beta gamma delta epsilon zeta eta theta"
     d = str(tmp_path / "span_src")
     b1 = spark.createDataFrame(
@@ -672,7 +673,7 @@ def test_span_dedup_each_batch_stream_equals_batch_twin(spark, tmp_path):
     )
     assert spark.table(table).count() == all_wh.count()
     assert spark.table(table).join(all_wh, "wh", "left_anti").count() == 0
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
 
     # plumbing smoke: the same callback behind a real file-source stream
     table2 = f"{table}_s"
@@ -693,14 +694,14 @@ def test_span_dedup_each_batch_stream_equals_batch_twin(spark, tmp_path):
     q.awaitTermination(120)
     assert sum(seen) == 6
     assert spark.table(table2).count() == all_wh.count()
-    spark.sql(f"DROP TABLE IF EXISTS {table2}")
+    drop_table_and_location(spark, table2)
 
 
 def test_span_dedup_each_batch_drop_and_flag_modes(spark, tmp_path):
     import uuid
 
     table = f"span_stream_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
     shared = "p0 p1 p2 p3 p4 p5 p6 p7"
     b1 = spark.createDataFrame(
         [(1, shared + " a"), (2, "totally different words here now ok")],
@@ -718,7 +719,7 @@ def test_span_dedup_each_batch_drop_and_flag_modes(spark, tmp_path):
     cb(b1, 0)
     cb(b2, 1)
     assert dropped == [[1, 2], [11]]  # doc 10 withheld (history dup)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
 
     flags = []
     cb2 = dstream.span_dedup_each_batch(
@@ -731,7 +732,7 @@ def test_span_dedup_each_batch_drop_and_flag_modes(spark, tmp_path):
     cb2(b2, 1)
     assert flags[0] == {1: False, 2: False}
     assert flags[1] == {10: True, 11: False}
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    drop_table_and_location(spark, table)
 
     import pytest as _pt
 
@@ -751,7 +752,7 @@ def test_dsir_select_each_batch_scores_against_folded_stores(spark):
     raw_t = f"dsir_raw_{uuid.uuid4().hex[:8]}"
     tgt_t = f"dsir_tgt_{uuid.uuid4().hex[:8]}"
     for t in (raw_t, tgt_t):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
     target = spark.createDataFrame(
         [(100, "alpha beta gamma alpha beta"), (101, "alpha gamma delta")],
         "doc_id long, text string",
@@ -794,7 +795,7 @@ def test_dsir_select_each_batch_scores_against_folded_stores(spark):
     )
     assert batch_kept == outs[1]
     for t in (raw_t, tgt_t):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
 
 
 def test_dsir_select_each_batch_requires_seeded_target(spark):
@@ -820,7 +821,7 @@ def test_transitions_each_batch_stream_equals_batch(spark):
     ct = f"trans_counts_{uuid.uuid4().hex[:8]}"
     lt = f"trans_last_{uuid.uuid4().hex[:8]}"
     for t in (ct, lt):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
     rows = [
         # user 1: a b | b a   (cross-batch pair b->b at the boundary)
         (1, 1, 1, "a"), (2, 1, 2, "b"),
@@ -857,7 +858,7 @@ def test_transitions_each_batch_stream_equals_batch(spark):
     last = {r["__u"]: r["__e"] for r in spark.table(lt).collect()}
     assert last == {1: "a", 2: "c", 3: "b"}
     for t in (ct, lt):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
 
 
 def test_funnel_each_batch_stream_equals_batch(spark):
@@ -869,7 +870,7 @@ def test_funnel_each_batch_stream_equals_batch(spark):
     from dataframes_spark.operators import funnel as fn
 
     st = f"funnel_state_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {st}")
+    drop_table_and_location(spark, st)
     sch = "event_id long, user_id long, ts timestamp, event_type string"
 
     def ev(eid, u, t, typ):
@@ -916,7 +917,7 @@ def test_funnel_each_batch_stream_equals_batch(spark):
     assert reports[1] == want_report
     # user 2's batch-1 state survived a batch it had no events in
     assert got_stage[2][0] == 1
-    spark.sql(f"DROP TABLE IF EXISTS {st}")
+    drop_table_and_location(spark, st)
 
 
 def test_retention_each_batch_order_independent_and_idempotent(spark):
@@ -929,7 +930,7 @@ def test_retention_each_batch_order_independent_and_idempotent(spark):
     from dataframes_spark.operators import funnel as fn
 
     pt = f"retention_pairs_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {pt}")
+    drop_table_and_location(spark, pt)
     sch = "event_id long, user_id long, ts timestamp"
 
     def ev(eid, u, day):
@@ -963,7 +964,7 @@ def test_retention_each_batch_order_independent_and_idempotent(spark):
     # store holds each (user, period) exactly once
     store = spark.table(pt)
     assert store.count() == store.distinct().count() == 6
-    spark.sql(f"DROP TABLE IF EXISTS {pt}")
+    drop_table_and_location(spark, pt)
 
 
 def test_retention_pair_store_compacts_without_changing_the_matrix(spark):
@@ -974,7 +975,7 @@ def test_retention_pair_store_compacts_without_changing_the_matrix(spark):
     from dataframes_spark.operators import funnel as fn
 
     pt = f"retention_pairs_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {pt}")
+    drop_table_and_location(spark, pt)
     sch = "event_id long, user_id long, ts timestamp"
     cb = dstream.retention_each_batch(pt, period="day")
     for epoch, day in enumerate((1, 2, 3, 4)):
@@ -997,7 +998,7 @@ def test_retention_pair_store_compacts_without_changing_the_matrix(spark):
         for r in fn.retention_from_pairs(spark.table(pt), "day").collect()
     }
     assert after == before
-    spark.sql(f"DROP TABLE IF EXISTS {pt}")
+    drop_table_and_location(spark, pt)
 
 
 def test_funnel_state_store_compacts_without_changing_the_report(spark):
@@ -1012,7 +1013,7 @@ def test_funnel_state_store_compacts_without_changing_the_report(spark):
     from dataframes_spark.operators import funnel as fn
 
     st = f"funnel_state_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {st}")
+    drop_table_and_location(spark, st)
     sch = "event_id long, user_id long, ts timestamp, event_type string"
     steps = ["view", "click", "buy"]
     cb = dstream.funnel_each_batch(st, steps)
@@ -1045,7 +1046,7 @@ def test_funnel_state_store_compacts_without_changing_the_report(spark):
         for r in fn.funnel_report_from_stages(spark.table(st), steps).collect()
     }
     assert after_rep == before_rep
-    spark.sql(f"DROP TABLE IF EXISTS {st}")
+    drop_table_and_location(spark, st)
 
 
 def test_transition_stores_compact_without_changing_the_matrix(spark):
@@ -1059,7 +1060,7 @@ def test_transition_stores_compact_without_changing_the_matrix(spark):
     ct = f"trans_counts_{uuid.uuid4().hex[:8]}"
     lt = f"trans_last_{uuid.uuid4().hex[:8]}"
     for t in (ct, lt):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
     sch = "event_id long, user_id long, ts long, event_type string"
     cb = dstream.transitions_each_batch(
         ct, lt, "user_id", "ts", "event_type", "event_id"
@@ -1078,7 +1079,7 @@ def test_transition_stores_compact_without_changing_the_matrix(spark):
     }
     assert got == {("a", "b"): 1, ("b", "c"): 1}
     for t in (ct, lt):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
 
 
 def test_quantiles_each_batch_exact_weight_and_error(spark):
@@ -1091,7 +1092,7 @@ def test_quantiles_each_batch_exact_weight_and_error(spark):
     from dataframes_spark.operators import kll as K
 
     t = f"kll_stream_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
     n = 9000
     served = []
     cb = dstream.quantiles_each_batch(
@@ -1113,7 +1114,7 @@ def test_quantiles_each_batch_exact_weight_and_error(spark):
     for snap in served:
         vals = [snap[q] for q in sorted(snap)]
         assert vals == sorted(vals)
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
 
 def test_cluster_each_batch_stream_equals_batch(spark):
@@ -1129,7 +1130,7 @@ def test_cluster_each_batch_stream_equals_batch(spark):
     lt = f"lsh_stream_{uuid.uuid4().hex[:8]}"
     ct = f"cluster_stream_{uuid.uuid4().hex[:8]}"
     for t in (lt, ct):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
     texts = {
         1: "the quick brown fox jumps over the lazy dog tonight",
         2: "the quick brown fox jumps over the lazy dog tonight",  # dup of 1
@@ -1166,7 +1167,7 @@ def test_cluster_each_batch_stream_equals_batch(spark):
     assert got[2] == got[1] and got[5] == got[3]
     assert 6 not in got and assigned[2][6] == 6
     for t in (lt, ct):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        drop_table_and_location(spark, t)
 
 
 def test_rollup_each_batch_stream_equals_batch(spark, tmp_path):
@@ -1176,7 +1177,7 @@ def test_rollup_each_batch_stream_equals_batch(spark, tmp_path):
     from dataframes_spark.operators import rollup as R
 
     t = f"rollup_stream_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
     out = str(tmp_path / "roll_ev")
     base = spark.range(600).select(
         F.col("id").alias("k"),
@@ -1218,7 +1219,7 @@ def test_rollup_each_batch_stream_equals_batch(spark, tmp_path):
         assert a[:2] == b[:2]
         assert a[2:] == pytest.approx(b[2:], rel=1e-9)
     assert len(served) >= 3 and served[-1] == len(exp)
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
 
 def test_rollup_distinct_each_batch_stream_equals_batch(spark, tmp_path):
@@ -1228,7 +1229,7 @@ def test_rollup_distinct_each_batch_stream_equals_batch(spark, tmp_path):
     from dataframes_spark.operators import rollup as R
 
     t = f"rollup_d_stream_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
     out = str(tmp_path / "roll_d_ev")
     base = spark.range(900).select(
         F.col("id").alias("k"),
@@ -1264,7 +1265,7 @@ def test_rollup_distinct_each_batch_stream_equals_batch(spark, tmp_path):
         )
     )
     assert got == exp and len(got) == 3
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
 
 def test_url_dedup_each_batch_stream_equals_incremental_fold(spark):
@@ -1276,7 +1277,7 @@ def test_url_dedup_each_batch_stream_equals_incremental_fold(spark):
     from dataframes_spark.functions import url as U
 
     t = f"url_fp_stream_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
     rows = [
         (1, "http://A.com/x?utm_source=s"),
         (2, "http://a.com/x"),        # dup of 1 after canonicalization
@@ -1306,7 +1307,7 @@ def test_url_dedup_each_batch_stream_equals_incremental_fold(spark):
         )
         fresh_all.append(sorted(r.doc_id for r in fresh.collect()))
     assert got == fresh_all
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
 
 def test_langid_each_batch_stream_equals_batch_scoring(spark):
@@ -1340,7 +1341,7 @@ def test_langid_each_batch_stream_equals_batch_scoring(spark):
         max_iter=30,
     )
     t = f"langid_stream_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
     L.langid_store_update(spark, t, w, b, dim=256)
     got = {}
     cb = dstream.langid_each_batch(
@@ -1365,4 +1366,4 @@ def test_langid_each_batch_stream_equals_batch_scoring(spark):
     )
     gate(docs, 0)
     assert sorted(kept) == sorted(i for i in want if want[i] == "en")
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from dataframes_spark.functions import unigram as U
 from dataframes_spark.functions.bpe import word_type_counts
+from dataframes_spark.io.store import drop_table_and_location
 
 CORPUS = [
     "the cat sat on the mat the cat",
@@ -143,7 +144,7 @@ def test_encode_matches_training_segmentation_and_unk(spark):
 
 
 def test_store_roundtrip(spark):
-    from dataframes_spark.io.store import drop_table_and_location, store_stamp
+    from dataframes_spark.io.store import store_stamp
 
     df = _df(spark)
     pieces = U.unigram_train(df, "text", vocab_size=10, max_piece_len=3)
@@ -162,7 +163,7 @@ def test_store_roundtrip(spark):
         )
     )
     assert direct == stored
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
 
 def test_fertility_vs_bpe_at_equal_vocab(spark):
@@ -211,7 +212,7 @@ def test_train_from_store_equals_one_shot(spark):
 
     df = _df(spark)
     t = f"ug_wordtypes_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
     for lo, hi in [(0, 2), (2, 4)]:
         batch = df.filter((F.col("id") >= lo) & (F.col("id") < hi))
         word_type_store_update(
@@ -232,7 +233,7 @@ def test_train_from_store_equals_one_shot(spark):
         ).collect()
     }
     assert refit == one_shot
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
 
 # ---------------------------------------------------------------------------

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataframes_spark.functions import url as U
+from dataframes_spark.io.store import drop_table_and_location
 
 
 def _canon(spark, urls, **kw):
@@ -105,7 +106,7 @@ def test_incremental_fold_law(spark):
 def test_incremental_store_no_reshuffle(spark):
     """A url-bucketed fingerprint store must satisfy the incremental
     anti join's distribution as scanned (no store-side Exchange)."""
-    from dataframes_spark.io.store import drop_table_and_location, staging_swap
+    from dataframes_spark.io.store import staging_swap
 
     t = f"url_fps_{uuid.uuid4().hex[:8]}"
     drop_table_and_location(spark, t)
@@ -129,7 +130,7 @@ def test_incremental_store_no_reshuffle(spark):
         assert got == [200 + i for i in range(50, 80)]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_table_and_location(spark, t)
 
 
 def test_host_report(spark):
